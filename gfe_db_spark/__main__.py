@@ -145,8 +145,21 @@ def cmd_snapshot(args) -> int:
         for name in list_snapshots(spark, args.root):
             print(name)
     elif args.action == "restore":
-        graph = load_snapshot(spark, args.root, args.version)
-        graph.save(args.graph)
+        # the snapshot is committed like a release load, so the restored
+        # graph is one the next `load` can extend; merging it over a live
+        # graph would not roll that graph back, so only an absent or empty
+        # target is accepted
+        from gfe_db_spark.plans.load import upsert_graph
+        from gfe_db_spark.plans.txtable import _list_names
+
+        if _list_names(spark, args.graph):
+            print(
+                f"refusing to restore into {args.graph}: it already holds data; "
+                "restore into an absent or empty path",
+                file=sys.stderr,
+            )
+            return 1
+        upsert_graph(load_snapshot(spark, args.root, args.version), args.graph)
         print(f"restored {args.version or 'latest'} -> {args.graph}")
     elif args.action == "diff":
         versions = list_snapshots(spark, args.root)

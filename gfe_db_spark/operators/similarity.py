@@ -274,7 +274,7 @@ def ivf_append_batch(
 
     Delivery contract: the append itself is all-or-nothing (parquet job
     commit), but REPLAYING a committed batch duplicates rows — an
-    at-least-once producer should route through `partitioned_upsert`
+    at-least-once producer should route through `plans/txtable.tx_upsert`
     keyed on (centroid_id, vec_id) instead, the same way the streaming
     sink does (streaming/structured.foreach_batch_upsert).
     """

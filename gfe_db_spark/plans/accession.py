@@ -16,15 +16,10 @@ Assignment must be:
   - serialized per commit (ST6: one writer; the driver-side orchestrator
     guarantees commit order across releases).
 
-Durability (r7): the registry commits through the manifest-pointer
-SEGMENT LOG (`plans/txtable.txlog_append`) by default — each commit
-writes one immutable segment dir and atomically publishes a manifest, so
-a reader polling DURING an append or a compaction always resolves one
-complete snapshot. This retires the registry's old rename-swap +
-`.compacting` marker protocol as the default (the one production-stateful
-table whose reader isolation rested on ST6 discipline alone — round-6
-verdict missing #1); the old protocol remains available as
-``layout="inplace"`` for existing registries.
+Durability: the registry commits through the manifest-pointer SEGMENT LOG
+(`plans/txtable.txlog_append`) — each commit writes one immutable segment
+dir and atomically publishes a manifest, so a reader polling DURING an
+append or a compaction always resolves one complete snapshot.
 
 Scale: the registry is keyed by (locus, term, rank, sequence); joins hash
 on those keys. At 100 TB the new-sequence side is small relative to the
@@ -36,8 +31,6 @@ accumulate, and the post-compaction vacuum bounds manifest count too.
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -53,21 +46,12 @@ class AccessionRegistry:
     """Persistent (parquet-backed) accession registry with deterministic
     first-seen numbering.
 
-    ``layout="tx"`` (default): each commit appends one immutable segment
-    through the manifest-pointer log (reader-isolated; see module
-    docstring). After `max_files` segments the log is folded into
-    `compact_files` parts by `txlog_compact` and old manifests/segments
-    are vacuumed, so a long release history keeps O(compact_files) data
-    files and a bounded manifest count — not O(commits) of either.
-
-    ``layout="inplace"``: the legacy flat parquet dir with rename-promote
-    appends and a `.compacting`-marker compaction swap. Kept as the
-    documented opt-out for registries created before r7; its swap window
-    is only safe under strict ST6 single-writer/single-reader discipline.
-
-    The layout is auto-guarded like `plans/load.upsert_graph`: committing
-    with the wrong layout against an existing registry raises instead of
-    silently splitting the data across two protocols."""
+    Each commit appends one immutable segment through the manifest-pointer
+    log (reader-isolated; see module docstring). After `max_files`
+    segments the log is folded into `compact_files` parts by
+    `txlog_compact` and old manifests/segments are vacuumed, so a long
+    release history keeps O(compact_files) data files and a bounded
+    manifest count — not O(commits) of either."""
 
     def __init__(
         self,
@@ -75,63 +59,35 @@ class AccessionRegistry:
         path: str,
         max_files: int = 16,
         compact_files: int = 4,
-        layout: str = "tx",
     ):
-        if layout not in ("tx", "inplace"):
-            raise ValueError(f"unknown registry layout {layout!r}")
         self.spark = spark
         self.path = path
         self.max_files = max_files
         self.compact_files = compact_files
-        self.layout = layout
-
-    # --- layout guard ----------------------------------------------------
-
-    def _detect_layout(self) -> str | None:
-        """Layout of the on-disk registry: 'tx' if a manifest dir exists,
-        'inplace' if top-level parquet parts exist, None if absent."""
-        fs, HPath = self._fs()
-        if fs.exists(HPath(os.path.join(self.path, "_manifests"))):
-            return "tx"
-        if fs.exists(HPath(self.path)):
-            for s in fs.listStatus(HPath(self.path)):
-                if s.getPath().getName().endswith(".parquet"):
-                    return "inplace"
-        if fs.exists(HPath(self.path + ".compacting")):
-            return "inplace"  # interrupted legacy compaction
-        return None
-
-    def _check_layout(self) -> None:
-        found = self._detect_layout()
-        if found is not None and found != self.layout:
-            raise ValueError(
-                f"registry at {self.path} uses the {found!r} layout; "
-                f"pass layout={found!r} — a {self.layout!r} commit would "
-                "hide or split the accumulated mapping"
-            )
 
     # --- public API -------------------------------------------------------
 
     def load(self) -> DataFrame:
         """Current registry frame. Sets ``self._loaded_empty``: True iff
         the storage layer STATICALLY knows there is no registry yet (no
-        manifest / no directory) — i.e. the returned frame is a zero-row
-        local relation, not a scan that might be empty."""
-        self._check_layout()
-        if self.layout == "tx":
-            from gfe_db_spark.plans.txtable import txlog_read
+        manifest) — i.e. the returned frame is a zero-row local relation,
+        not a scan that might be empty.
 
-            df = txlog_read(self.spark, self.path)
-            if df is not None:
-                self._loaded_empty = False
-                return df
-            self._loaded_empty = True
-            return self.spark.createDataFrame([], schema=ACCESSION_REGISTRY)
-        self._recover()
-        fs, HPath = self._fs()
-        if fs.exists(HPath(self.path)):  # Hadoop FS: works for hdfs/s3a too
+        A path holding parquet parts but no ``_manifests`` is refused: read
+        as an empty log, its accessions would be renumbered from 1, breaking
+        the permanent 1-to-1 mapping."""
+        from gfe_db_spark.plans.txtable import _list_names, txlog_read
+
+        df = txlog_read(self.spark, self.path)
+        if df is not None:
             self._loaded_empty = False
-            return self.spark.read.parquet(self.path)
+            return df
+        names = _list_names(self.spark, self.path)
+        if "_manifests" not in names and any(n.endswith(".parquet") for n in names):
+            raise ValueError(
+                f"registry at {self.path} holds parquet parts but no _manifests; "
+                "refusing to renumber its accessions from 1"
+            )
         self._loaded_empty = True
         return self.spark.createDataFrame([], schema=ACCESSION_REGISTRY)
 
@@ -197,21 +153,10 @@ class AccessionRegistry:
         # instead of an empty segment + manifest bump.
         numbered = numbered.persist()
         try:
-            has_new = bool(numbered.head(1))
-            if self.layout == "tx":
+            if numbered.head(1):
                 from gfe_db_spark.plans.txtable import txlog_append
 
-                if has_new:
-                    txlog_append(numbered, self.path, n_files=1)
-            elif has_new:
-                # legacy: stage to a tmp dir so the write never reads the
-                # directory it appends to, then promote the staged part
-                # files by rename (atomic-per-file on HDFS-like FSes).
-                tmp = self.path + ".tmp"
-                numbered.repartition(self.compact_files).write.mode(
-                    "overwrite"
-                ).parquet(tmp)
-                self._promote(tmp)
+                txlog_append(numbered, self.path, n_files=1)
         finally:
             numbered.unpersist()
         self._compact_if_needed()
@@ -224,101 +169,15 @@ class AccessionRegistry:
     # --- compaction -------------------------------------------------------
 
     def _compact_if_needed(self) -> None:
-        if self.layout == "tx":
-            from gfe_db_spark.plans.txtable import (
-                tx_vacuum,
-                txlog_compact,
-                txlog_segment_count,
-            )
-
-            if txlog_segment_count(self.spark, self.path) > self.max_files:
-                txlog_compact(self.spark, self.path, n_files=self.compact_files)
-                # bound manifest count too: retain the last 2 snapshots
-                # (the standard reader-grace contract); superseded
-                # segments are provably published → no grace needed
-                tx_vacuum(self.spark, self.path, keep_manifests=2)
-            return
-        self._compact_inplace_if_needed()
-
-    def _compact_inplace_if_needed(self) -> None:
-        """Rewrite the registry into `compact_files` parts once `max_files`
-        part files have accumulated. Contents are unchanged (pure file-
-        layout rewrite); the swap is rename-based with a `.compacting`
-        recovery marker, so a crash at any point leaves a loadable
-        registry (see `_recover`). Runs under the caller's commit
-        serialization (ST6), so no concurrent reader sees the swap."""
-        fs, HPath = self._fs()
-        dst = HPath(self.path)
-        if not fs.exists(dst):
-            return
-        parts = [
-            s for s in fs.listStatus(dst) if s.getPath().getName().endswith(".parquet")
-        ]
-        if len(parts) <= self.max_files:
-            return
-        compacting = self.path + ".compacting"
-        (
-            self.spark.read.parquet(self.path)
-            .repartition(self.compact_files)
-            .write.mode("overwrite")
-            .parquet(compacting)
+        from gfe_db_spark.plans.txtable import (
+            tx_vacuum,
+            txlog_compact,
+            txlog_segment_count,
         )
-        # Own completion marker, written only after the staged write
-        # returned: clusters can disable the committer's _SUCCESS marker
-        # (mapreduce.fileoutputcommitter.marksuccessfuljobs=false), and
-        # recovery must not depend on committer configuration.
-        from gfe_db_spark.plans.merge import fs_write_text
 
-        fs_write_text(self.spark, compacting + "/_COMPACTION_COMPLETE", "ok")
-        fs.delete(dst, True)
-        fs.rename(HPath(compacting), dst)
-        # the marker has served its purpose; drop it so the registry dir
-        # holds only parquet parts (plus any committer bookkeeping)
-        fs.delete(HPath(self.path + "/_COMPACTION_COMPLETE"), False)
-
-    def _recover(self) -> None:
-        """Finish an interrupted legacy compaction: if the registry dir is
-        gone but a fully-written `.compacting` dir exists (crash between
-        delete and rename in `_compact_inplace_if_needed`), promote it."""
-        fs, HPath = self._fs()
-        compacting = HPath(self.path + ".compacting")
-        if not fs.exists(HPath(self.path)) and fs.exists(compacting):
-            complete = fs.exists(HPath(self.path + ".compacting/_COMPACTION_COMPLETE"))
-            # legacy staged dirs predate the explicit marker; their
-            # committer _SUCCESS is an acceptable completion witness
-            complete = complete or fs.exists(HPath(self.path + ".compacting/_SUCCESS"))
-            if complete:
-                fs.rename(compacting, HPath(self.path))
-                marker = HPath(self.path + "/_COMPACTION_COMPLETE")
-                if fs.exists(marker):
-                    fs.delete(marker, False)
-            else:
-                # can't occur under the protocol (delete runs only after a
-                # successful staged write) — never destroy data silently
-                raise RuntimeError(
-                    f"registry {self.path} missing and {self.path}.compacting "
-                    "is partial; manual recovery required"
-                )
-
-    def _fs(self):
-        from gfe_db_spark.plans.merge import hadoop_fs
-
-        fs, _ = hadoop_fs(self.spark, self.path)
-        return fs, self.spark._jvm.org.apache.hadoop.fs.Path
-
-    def _promote(self, tmp: str) -> None:
-        """Move staged part files into the registry dir via the Hadoop
-        FileSystem API (works for file://, hdfs://, s3a:// alike). Part
-        names carry a per-write UUID, so renames cannot collide."""
-        jvm = self.spark._jvm
-        conf = self.spark._jsc.hadoopConfiguration()
-        HPath = jvm.org.apache.hadoop.fs.Path
-        src = HPath(tmp)
-        fs = src.getFileSystem(conf)
-        dst = HPath(self.path)
-        fs.mkdirs(dst)
-        for status in fs.listStatus(src):
-            name = status.getPath().getName()
-            if name.endswith(".parquet") and status.getLen() > 0:
-                fs.rename(status.getPath(), HPath(dst, name))
-        fs.delete(src, True)
+        if txlog_segment_count(self.spark, self.path) > self.max_files:
+            txlog_compact(self.spark, self.path, n_files=self.compact_files)
+            # bound manifest count too: retain the last 2 snapshots (the
+            # standard reader-grace contract); superseded segments are
+            # provably published → no grace needed
+            tx_vacuum(self.spark, self.path, keep_manifests=2)

@@ -9,7 +9,7 @@ no Exchange on either side (pinned by
 tests/test_plan_contracts.py::test_bucketed_join_is_shuffle_free).
 
 This is the catalog-table twin of the `__bucket=` directory layout that
-`plans/merge.partitioned_upsert` uses for its MERGE substrate — same
+`plans/txtable.tx_upsert` uses for its MERGE substrate — same
 hash-co-location idea, expressed through Spark's native bucketing so the
 optimizer (not our code) recognizes the distribution.
 """

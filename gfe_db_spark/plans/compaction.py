@@ -1,15 +1,14 @@
 """Small-file compaction for parquet targets (the OPTIMIZE maintenance op).
 
-Every incremental writer in this engine — `partitioned_upsert` commits,
-streaming foreachBatch sinks, snapshot appends — adds files per commit, and
+Every incremental writer of plain parquet — batch appends, snapshot
+exports, hive-partitioned dumps — adds files per commit, and
 at 100 TB the accumulated small files dominate scan cost: each file costs a
 task, an open, and a footer read, so a table written by 10k commits can
 spend more time scheduling than scanning. The reference never needs this
 (its store compacts internally, ref ``neo4j.conf:24-34`` store tuning);
 on plain parquet it is the operator a user must run.
 
-Protocol (same crash-safety discipline as `plans/accession.py`'s registry
-compaction and `plans/merge.py`'s two-phase commit):
+Protocol (staged write + completion marker + swap):
 
 1. list the target's data files via the Hadoop FS API (file://, hdfs://,
    s3a:// alike) — sizes only, no data read;
@@ -95,9 +94,8 @@ def compact_small_files(
     recover_compaction(spark, path)
     files = _list_data_files(spark, path)
     bytes_total = sum(sz for _, sz in files)
-    # mergeSchema ALWAYS: a schema-evolved target (partitioned_upsert with
-    # allow_schema_evolution) has files with differing schemas, and a
-    # plain read samples one footer — compacting through it would silently
+    # mergeSchema ALWAYS: a target appended to with a widened schema has
+    # files with differing schemas, and a plain read samples one footer — compacting through it would silently
     # drop the evolved columns from old partitions. The footer-merge cost
     # is negligible next to the rewrite itself. Bonus: after compaction
     # every file carries the full schema, so plain reads work again.

@@ -18,6 +18,7 @@ Key corrections over the reference (SURVEY §7 "inconsistencies"):
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
 from dataclasses import dataclass, fields
 
 from pyspark.sql import DataFrame, SparkSession
@@ -60,16 +61,17 @@ class GraphTables:
 
     @staticmethod
     def load(spark: SparkSession, path: str) -> "GraphTables":
-        """Load the accumulated graph. Layout is auto-detected: a
-        `_graph_manifests` child marks the reader-isolated two-level
-        manifest layout (`upsert_graph(layout="tx")`) — ONE graph-manifest
-        read pins every table to the generation the same load committed,
-        so the snapshot is consistent ACROSS tables, not just within each
-        (a reader polling during a release load sees the whole graph
-        before the load or the whole graph after it, the isolation the
-        reference gets from Neo4j transactions, ref load.cyp:9). Without
-        it, the in-place bucketed layout (plans/merge.py) is read live."""
-        from gfe_db_spark.plans.merge import fs_exists, read_bucketed
+        """Load the accumulated graph. A `_graph_manifests` child marks a
+        graph committed by `upsert_graph`: ONE graph-manifest read pins
+        every table to the generation the same load committed, so the
+        snapshot is consistent ACROSS tables, not just within each (a
+        reader polling during a release load sees the whole graph before
+        the load or the whole graph after it, the isolation the reference
+        gets from Neo4j transactions, ref load.cyp:9). Without it, each
+        table resolves through its own manifest if it has one (a load that
+        crashed before its first graph-manifest publish), else is read as
+        plain parquet (a snapshot dir written by `save`)."""
+        from gfe_db_spark.plans.merge import fs_exists
         from gfe_db_spark.plans.txtable import latest_numbered_json, tx_read
 
         _n, gdoc = latest_numbered_json(spark, _graph_manifest_dir(path))
@@ -87,7 +89,7 @@ class GraphTables:
             tpath = os.path.join(path, name)
             if fs_exists(spark, os.path.join(tpath, "_manifests")):
                 return tx_read(spark, tpath)
-            return read_bucketed(spark, tpath)
+            return spark.read.parquet(tpath)
 
         return GraphTables(**{f.name: load_one(f.name) for f in fields(GraphTables)})
 
@@ -249,35 +251,58 @@ def _graph_manifest_dir(graph_path: str) -> str:
     return os.path.join(graph_path, "_graph_manifests")
 
 
+def _releases_union(existing: DataFrame, batch: DataFrame) -> DataFrame:
+    """The A6 ON MATCH combine: set-union of the `releases` arrays per edge
+    (load.cyp:93-95). Groups by every other column — the (src, dst) keys,
+    plus ``__bucket`` on disk commits, which is a function of the keys, so
+    grouping by it too is exact."""
+    return (
+        existing.unionByName(batch)
+        .groupBy(*[c for c in existing.columns if c != "releases"])
+        .agg(
+            F.array_sort(F.array_distinct(F.flatten(F.collect_list("releases")))).alias(
+                "releases"
+            )
+        )
+    )
+
+
+def _merge_args(
+    name: str,
+) -> tuple[list[str], str, Callable[[DataFrame, DataFrame], DataFrame] | None]:
+    """(keys, on_match, merge_fn) for one table's MERGE_RULES entry."""
+    keys, rule = MERGE_RULES[name]
+    if rule == "releases_union":
+        return keys, "update", _releases_union
+    return keys, rule, None
+
+
 def upsert_graph(
     new: GraphTables,
     graph_path: str,
     n_buckets: int = 16,
     layout: str = "tx",
 ) -> dict[str, list[int]]:
-    """Commit one release's graph tables into the on-disk accumulated graph
-    via the partition-pruned MERGE substrate: each table is hash-bucketed
-    on its merge key and only the buckets this release touches are read
-    and rewritten — commit cost is O(release), not O(accumulated graph).
-    Semantics per table = merge_graphs (same rules, disk-backed). Returns
-    touched buckets per table.
+    """Commit one release's graph tables into the on-disk accumulated graph:
+    each table is a manifest-pointer table (`plans/txtable.tx_upsert`),
+    hash-bucketed on its merge key, and only the buckets this release
+    touches are read and rewritten — commit cost is O(release), not
+    O(accumulated graph). Semantics per table = merge_graphs (same
+    MERGE_RULES, disk-backed). Returns touched buckets per table.
 
-    `layout` picks the commit protocol, same merge semantics either way:
-    - ``"inplace"``: `plans/merge.partitioned_upsert` — dynamic
-      partition overwrite of the live dirs; cheapest, but a reader
-      scanning DURING the commit can see a half-swapped partition mix —
-      the documented opt-out for strictly single-reader deployments.
-    - ``"tx"`` (default since r7): `plans/txtable.tx_upsert` — each table is a
-      manifest-pointer table; a commit lands in a fresh generation dir
-      published by an atomic manifest rename. On top, ONE graph-level
-      manifest (``_graph_manifests/N.json``) is published AFTER all 11
-      table commits, pinning each table to the generation this load
-      produced — `GraphTables.load` resolves through it, so a polling
-      reader sees the whole graph before the load or the whole graph
-      after it, never release N's nodes with release N-1's edges (the
-      cross-table atomicity the reference gets from Neo4j transactions,
-      ref load.cyp:9 `apoc.periodic.iterate`)."""
-    from gfe_db_spark.plans.merge import partitioned_upsert
+    A table commit lands in a fresh generation dir published by an atomic
+    manifest rename. On top, ONE graph-level manifest
+    (``_graph_manifests/N.json``) is published AFTER all 11 table commits,
+    pinning each table to the generation this load produced —
+    `GraphTables.load` resolves through it, so a polling reader sees the
+    whole graph before the load or the whole graph after it, never release
+    N's nodes with release N-1's edges (the cross-table atomicity the
+    reference gets from Neo4j transactions, ref load.cyp:9
+    `apoc.periodic.iterate`).
+
+    `layout` accepts only ``"tx"`` (anything else raises ValueError); the
+    keyword stays because existing wrappers forward ``layout="tx"``."""
+    from gfe_db_spark.plans.merge import fs_exists
     from gfe_db_spark.plans.txtable import (
         current_manifest_number,
         latest_numbered_json,
@@ -285,68 +310,33 @@ def upsert_graph(
         tx_upsert,
     )
 
-    if layout not in ("inplace", "tx"):
-        raise ValueError(f"unknown graph layout {layout!r}")
-    # layout-switch guard: committing with the WRONG layout against an
-    # existing graph silently loses data (tx sees an empty table and
-    # publishes a graph manifest hiding the bucketed dirs; inplace writes
-    # dirs the manifest-resolving reader never consults). Detect the
-    # other layout's artifacts and refuse.
-    from gfe_db_spark.plans.merge import fs_exists
-
+    if layout != "tx":
+        raise ValueError(f"unknown graph layout {layout!r}; only 'tx' is supported")
+    # a tx commit into a path holding non-manifest data would start from an
+    # empty table and publish a graph manifest hiding that data — refuse
     spark = new.nodes_gfe.sparkSession
-    has_graph_manifest = fs_exists(spark, _graph_manifest_dir(graph_path))
     probe = os.path.join(graph_path, "nodes_gfe")
-    # the inplace direction probes the per-table _manifests dir TOO (not
-    # just the graph manifest): a tx load that crashed after some table
-    # commits but before the first graph-manifest publish leaves
-    # _manifests dirs with no _graph_manifests — an inplace commit then
-    # would write bucketed dirs that tx-resolving readers (load_one
-    # detects _manifests) never consult, the exact silent loss this
-    # guard exists to prevent
-    if layout == "inplace" and (
-        has_graph_manifest or fs_exists(spark, os.path.join(probe, "_manifests"))
-    ):
-        raise ValueError(
-            f"graph at {graph_path} uses the tx (manifest-pointer) layout; "
-            "pass layout='tx' — an in-place commit would be invisible to "
-            "manifest-resolving readers"
-        )
     if (
-        layout == "tx"
-        and not has_graph_manifest
+        not fs_exists(spark, _graph_manifest_dir(graph_path))
         and fs_exists(spark, probe)
         and not fs_exists(spark, os.path.join(probe, "_manifests"))
     ):
         raise ValueError(
-            f"graph at {graph_path} uses the in-place bucketed layout; "
-            "pass layout='inplace' — a tx commit would start from an empty "
-            "table and hide the accumulated data"
-        )
-    do_upsert = tx_upsert if layout == "tx" else partitioned_upsert
-
-    def releases_union(existing: DataFrame, batch: DataFrame) -> DataFrame:
-        # __bucket = f(src, dst), so grouping by it alongside the keys is
-        # exact (load.cyp:93-95 array union, as in merge_graphs)
-        return (
-            existing.unionByName(batch)
-            .groupBy("src", "dst", "__bucket")
-            .agg(
-                F.array_sort(
-                    F.array_distinct(F.flatten(F.collect_list("releases")))
-                ).alias("releases")
-            )
+            f"graph at {graph_path} holds non-manifest data; a tx commit "
+            "would start from an empty table and hide it"
         )
 
     def commit_one(item):
         name, df = item
-        keys, rule = MERGE_RULES[name]
-        path = os.path.join(graph_path, name)
-        if rule == "releases_union":
-            return name, do_upsert(
-                df, path, keys, n_buckets=n_buckets, merge_fn=releases_union
-            )
-        return name, do_upsert(df, path, keys, on_match=rule, n_buckets=n_buckets)
+        keys, on_match, merge_fn = _merge_args(name)
+        return name, tx_upsert(
+            df,
+            os.path.join(graph_path, name),
+            keys,
+            on_match=on_match,
+            n_buckets=n_buckets,
+            merge_fn=merge_fn,
+        )
 
     # the 11 table MERGEs are independent — run them as concurrent driver
     # jobs so the cluster pipelines them instead of paying 11 sequential
@@ -357,20 +347,18 @@ def upsert_graph(
     with ThreadPoolExecutor(max_workers=8) as pool:
         touched = dict(pool.map(commit_one, new.items()))
 
-    if layout == "tx":
-        # cross-table atomic publish: pin every table at the generation
-        # this load just committed; readers resolve the graph through
-        # this single pointer (see GraphTables.load)
-        spark = new.nodes_gfe.sparkSession
-        gens = {
-            name: current_manifest_number(spark, os.path.join(graph_path, name))
-            for name, _df in new.items()
-        }
-        gmdir = _graph_manifest_dir(graph_path)
-        n, _doc = latest_numbered_json(spark, gmdir)
-        publish_numbered_json(
-            spark, gmdir, (n or 0) + 1, {"generation": (n or 0) + 1, "tables": gens}
-        )
+    # cross-table atomic publish: pin every table at the generation this
+    # load just committed; readers resolve the graph through this single
+    # pointer (see GraphTables.load)
+    gens = {
+        name: current_manifest_number(spark, os.path.join(graph_path, name))
+        for name, _df in new.items()
+    }
+    gmdir = _graph_manifest_dir(graph_path)
+    n, _doc = latest_numbered_json(spark, gmdir)
+    publish_numbered_json(
+        spark, gmdir, (n or 0) + 1, {"generation": (n or 0) + 1, "tables": gens}
+    )
     return touched
 
 
@@ -381,12 +369,12 @@ def vacuum_graph(
     keep_manifests: int = 2,
     grace_seconds: float | None = None,
 ) -> list[str]:
-    """Graph-aware vacuum for a tx-layout graph: the ONLY safe way to
-    reclaim space under member tables, because the graph manifest pins
-    each table to a FIXED generation — a per-table `tx_vacuum` with no
-    pins can prune the very manifest a retained graph manifest still
-    references (two compactions, or keep_manifests=1, suffice), breaking
-    `GraphTables.load` until the next load republishes.
+    """Graph-aware vacuum for a graph committed by `upsert_graph`: the
+    ONLY safe way to reclaim space under member tables, because the graph
+    manifest pins each table to a FIXED generation — a per-table
+    `tx_vacuum` with no pins can prune the very manifest a retained graph
+    manifest still references (two compactions, or keep_manifests=1,
+    suffice), breaking `GraphTables.load` until the next load republishes.
 
     Three steps, each with the same retention contract (a reader that
     resolved any of the last `keep_graph_manifests` graph snapshots still
@@ -441,54 +429,12 @@ def vacuum_graph(
 
 
 def merge_graphs(old: GraphTables, new: GraphTables) -> GraphTables:
-    """Cross-release MERGE: ON CREATE = keep old row, insert new keys;
-    ON MATCH behavior per table mirrors load.cyp (create-only vs update vs
-    releases-array union)."""
+    """Cross-release MERGE in memory: ON CREATE = keep old row, insert new
+    keys; ON MATCH per table as MERGE_RULES says (create-only vs update vs
+    releases-array union, mirroring load.cyp)."""
+    from gfe_db_spark.plans.merge import apply_merge_rule
 
-    def create_only(old_df: DataFrame, new_df: DataFrame, keys: list[str]) -> DataFrame:
-        return old_df.unionByName(new_df.join(old_df, on=keys, how="left_anti"))
-
-    def update_on_match(old_df: DataFrame, new_df: DataFrame, keys: list[str]) -> DataFrame:
-        # last-writer-wins: new release's row replaces matched rows
-        return new_df.unionByName(old_df.join(new_df, on=keys, how="left_anti"))
-
-    # releases array set-union (load.cyp:93-95)
-    ipd_edges = (
-        old.edges_has_ipd_allele.unionByName(new.edges_has_ipd_allele)
-        .groupBy("src", "dst")
-        .agg(
-            F.array_sort(F.array_distinct(F.flatten(F.collect_list("releases")))).alias(
-                "releases"
-            )
-        )
-    )
-
-    return GraphTables(
-        nodes_gfe=create_only(old.nodes_gfe, new.nodes_gfe, ["name"]),
-        nodes_sequence=update_on_match(old.nodes_sequence, new.nodes_sequence, ["name"]),
-        nodes_feature=create_only(
-            old.nodes_feature,
-            new.nodes_feature,
-            ["locus", "rank", "term", "accession", "sequence"],
-        ),
-        nodes_ipd_allele=update_on_match(
-            old.nodes_ipd_allele, new.nodes_ipd_allele, ["name"]
-        ),
-        nodes_ipd_accession=create_only(
-            old.nodes_ipd_accession, new.nodes_ipd_accession, ["name"]
-        ),
-        nodes_submitter=old.nodes_submitter,
-        edges_has_ipd_allele=ipd_edges,
-        edges_has_ipd_accession=create_only(
-            old.edges_has_ipd_accession, new.edges_has_ipd_accession, ["src", "dst"]
-        ),
-        edges_submitted=create_only(old.edges_submitted, new.edges_submitted, ["src", "dst"]),
-        edges_has_sequence=create_only(
-            old.edges_has_sequence, new.edges_has_sequence, ["src", "dst"]
-        ),
-        edges_has_feature=create_only(
-            old.edges_has_feature,
-            new.edges_has_feature,
-            ["src", "dst_locus", "dst_rank", "dst_term", "dst_accession"],
-        ),
-    )
+    return GraphTables(**{
+        name: apply_merge_rule(old_df, getattr(new, name), *_merge_args(name))
+        for name, old_df in old.items()
+    })

@@ -1,39 +1,25 @@
-"""Partition-pruned MERGE substrate over plain parquet.
+"""MERGE rules and key bucketing over plain parquet.
 
 The reference's load path is a per-table idempotent upsert (Neo4j MERGE,
 ref ``load.cyp:1-138``). Absent a transactional table format (SURVEY §4
 allows parquet), the naive parquet MERGE is read-union-dedup-overwrite of
 the WHOLE target per commit — O(table) per batch, a scale-killer at
-100 TB. This module is the scale path:
+100 TB. This module holds the pieces that make a commit O(batch):
 
-Targets are hash-bucketed on their merge key (``__bucket =
-pmod(xxhash64(keys), n_buckets)`` — deterministic, engine-portable) and
-written ``partitionBy("__bucket")``. A commit then:
+- `bucket_expr`: targets are hash-bucketed on their merge key
+  (``__bucket = pmod(xxhash64(keys), n_buckets)`` — deterministic,
+  engine-portable), so a batch touches a bounded set of buckets and only
+  those are read and rewritten;
+- `apply_merge_rule` / `merge_clustered`: the ON MATCH semantics
+  (create_only / update / custom merge_fn), unclustered for in-memory
+  merges and clustered-by-``__bucket`` for disk commits;
+- the ``fs_*`` helpers: Hadoop FileSystem access for any scheme.
 
-1. computes the batch's touched buckets (≤ n_buckets small ints — this is
-   partition *metadata*, not data, so the driver collect is bounded and
-   O(1) in table size);
-2. reads ONLY those partitions of the target (the literal ``IN`` filter on
-   the partition column prunes at scan planning — untouched partitions are
-   never read);
-3. merges batch vs pruned-existing under the table's ON MATCH rule
-   (create_only / update / custom merge_fn);
-4. stages the merged touched partitions, then commits them with dynamic
-   partition overwrite — untouched partition directories are never
-   rewritten.
-
-Cost per commit: O(batch + touched partitions), independent of target
-size once n_buckets exceeds the batch's key spread. On a Delta/Iceberg
-cluster the same call sites become ``MERGE INTO``; the bucket column and
-commit protocol carry over unchanged.
-
-The dynamic-overwrite commit here mutates the live directory, so a reader
-scanning DURING a commit can see a partial partition mix (writers are
-serialized by ST6, readers are not). When readers must be isolated from
-in-flight commits, use `plans/txtable.py`: the same bucketing and merge
-rules, but each commit lands in a fresh immutable generation dir published
-by an atomic manifest rename — a reader always resolves one complete
-snapshot.
+The commit protocol itself lives in `plans/txtable.py`: each commit lands
+in a fresh immutable generation dir published by an atomic manifest
+rename, so a reader always resolves one complete snapshot. On a
+Delta/Iceberg cluster the same call sites become ``MERGE INTO``; the
+bucket column and merge rules carry over unchanged.
 """
 
 from __future__ import annotations
@@ -53,83 +39,23 @@ def bucket_expr(keys: list[str], n_buckets: int = DEFAULT_BUCKETS) -> Column:
     return F.pmod(F.xxhash64(*[F.col(k) for k in keys]), F.lit(n_buckets)).cast("int")
 
 
-def read_bucketed(spark, target_path: str, merge_schema: bool = False) -> DataFrame:
-    """Read a bucketed target without the bookkeeping column. Pass
-    merge_schema=True for targets committed with allow_schema_evolution —
-    untouched partitions keep the pre-evolution file schema, so a plain
-    read would silently drop the new columns."""
-    reader = spark.read
-    if merge_schema:
-        reader = reader.option("mergeSchema", "true")
-    df = reader.parquet(target_path)
-    return df.drop("__bucket") if "__bucket" in df.columns else df
-
-
-def _sidecar_path(target_path: str) -> str:
-    """Bucket-count sidecar lives NEXT to the target directory (not inside
-    it) so neither full-overwrite bootstrap nor dynamic partition overwrite
-    can clobber it."""
-    return target_path.rstrip("/") + ".n_buckets"
-
-
-def _check_bucket_count(spark, target_path: str, n_buckets: int) -> None:
-    """Enforce one n_buckets per target across commits.
-
-    A commit with a different n_buckets silently mis-buckets keys — matched
-    rows are missed and the upsert degrades into duplicate-key appends — so
-    this is a hard error, not a warning. Legacy targets without a sidecar
-    are adopted: the current n_buckets is recorded and enforced from then
-    on (in-repo call sites were already consistent per target).
-    """
-    side = _sidecar_path(target_path)
-    if fs_exists(spark, side):
-        recorded = int(fs_read_text(spark, side).strip())
-        if recorded != n_buckets:
-            raise ValueError(
-                f"bucket-count mismatch for {target_path}: target was created "
-                f"with n_buckets={recorded}, commit requested {n_buckets}"
-            )
-    else:
-        fs_write_text(spark, side, str(n_buckets))
-
-
-def recover_staging(spark, target_path: str) -> bool:
-    """Drop a leftover ``.staging`` dir from a crashed commit; True if one
-    was found.
-
-    Safe at every crash point: before the dynamic overwrite starts the
-    target is untouched, and a crash mid-overwrite leaves a mix of old and
-    new partition dirs that replaying the same batch repairs (the merge
-    rules are idempotent — 'update' re-wins, 'create_only' re-keeps, a
-    merge_fn must be idempotent by contract). The staging copy itself is
-    never the source of truth, so deleting it is always correct.
-    """
-    staging = target_path + ".staging"
-    if fs_exists(spark, staging):
-        fs_delete(spark, staging)
-        return True
-    return False
-
-
 def apply_merge_rule(
     existing: DataFrame,
     batch: DataFrame,
     keys: list[str],
     on_match: str,
     merge_fn: Callable[[DataFrame, DataFrame], DataFrame] | None,
-    allow_schema_evolution: bool = False,
 ) -> DataFrame:
-    """The ON MATCH semantics shared by every MERGE writer in the engine
-    (`partitioned_upsert` here, `txtable.tx_upsert` for the
-    reader-isolated layout): batch-wins update, create_only, or a custom
-    combine."""
-    evolve = {"allowMissingColumns": True} if allow_schema_evolution else {}
+    """The ON MATCH semantics of every MERGE in the engine: batch-wins
+    update, create_only, or a custom combine. This is the unclustered form
+    the in-memory graph merge (`plans/load.merge_graphs`) uses;
+    `merge_clustered` is its single-exchange twin for disk commits."""
     if merge_fn is not None:
         return merge_fn(existing, batch)
     if on_match == "update":
-        return batch.unionByName(existing.join(batch, on=keys, how="left_anti"), **evolve)
+        return batch.unionByName(existing.join(batch, on=keys, how="left_anti"))
     if on_match == "create_only":
-        return existing.unionByName(batch.join(existing, on=keys, how="left_anti"), **evolve)
+        return existing.unionByName(batch.join(existing, on=keys, how="left_anti"))
     raise ValueError(f"unknown on_match: {on_match}")
 
 
@@ -139,7 +65,6 @@ def merge_clustered(
     keys: list[str],
     on_match: str,
     merge_fn: Callable[[DataFrame, DataFrame], DataFrame] | None,
-    allow_schema_evolution: bool = False,
 ) -> DataFrame:
     """`apply_merge_rule` ∘ cluster-by-__bucket in ONE exchange (r14,
     guide §2.4/§8): the rule-based MERGE plans as a priority argmax over
@@ -173,10 +98,9 @@ def merge_clustered(
         return merge_fn(existing, batch).repartition(F.col("__bucket"))
     if on_match not in ("update", "create_only"):
         raise ValueError(f"unknown on_match: {on_match}")
-    evolve = {"allowMissingColumns": True} if allow_schema_evolution else {}
     batch_pri = 1 if on_match == "update" else 0
     u = batch.withColumn("__pri", F.lit(batch_pri)).unionByName(
-        existing.withColumn("__pri", F.lit(1 - batch_pri)), **evolve
+        existing.withColumn("__pri", F.lit(1 - batch_pri))
     )
     others = [c for c in u.columns if c not in {*keys, "__bucket", "__pri"}]
     keys_nonnull = F.lit(True)
@@ -211,80 +135,6 @@ def merge_clustered(
     return merged.unionByName(null_existing).unionByName(null_batch)
 
 
-def partitioned_upsert(
-    batch: DataFrame,
-    target_path: str,
-    keys: list[str],
-    on_match: str = "update",
-    n_buckets: int = DEFAULT_BUCKETS,
-    merge_fn: Callable[[DataFrame, DataFrame], DataFrame] | None = None,
-    allow_schema_evolution: bool = False,
-) -> list[int]:
-    """MERGE `batch` into the bucketed parquet target; returns the list of
-    touched buckets (telemetry / tests).
-
-    on_match='update'      → batch row wins for matched keys (ON MATCH SET)
-    on_match='create_only' → existing row kept, only new keys inserted
-    merge_fn(existing, batch) → custom combine (e.g. releases array union);
-    both inputs carry ``__bucket`` and the result must preserve it.
-
-    allow_schema_evolution=True lets a batch add (or omit) columns, the
-    Delta/Iceberg ``MERGE ... WITH SCHEMA EVOLUTION`` semantics on plain
-    parquet: missing columns null-fill on either side, and the existing
-    side is read with ``mergeSchema`` because untouched partitions keep
-    their old file schema until their next rewrite — so evolved targets
-    MUST be read via `read_bucketed(..., merge_schema=True)`. Off by
-    default: an unexpected schema drift should be a loud error, not a
-    silent null column.
-    """
-    spark = batch.sparkSession
-    recover_staging(spark, target_path)
-    batch = batch.withColumn("__bucket", bucket_expr(keys, n_buckets)).persist()
-    try:
-        if not fs_exists(spark, target_path):
-            _check_bucket_count(spark, target_path, n_buckets)
-            # bootstrap: merge against an empty existing side so the
-            # dedup / combine invariant holds from the first commit too
-            batch_merged = merge_clustered(
-                batch.filter(F.lit(False)),
-                batch,
-                keys,
-                on_match,
-                merge_fn,
-                allow_schema_evolution,
-            )
-            _write_bucketed(batch_merged, target_path, clustered=True)
-            return sorted(r[0] for r in batch.select("__bucket").distinct().collect())
-
-        _check_bucket_count(spark, target_path, n_buckets)
-        touched = sorted(r[0] for r in batch.select("__bucket").distinct().collect())
-        reader = spark.read
-        if allow_schema_evolution:
-            reader = reader.option("mergeSchema", "true")
-        existing = reader.parquet(target_path).filter(F.col("__bucket").isin(touched))
-        merged = merge_clustered(
-            existing, batch, keys, on_match, merge_fn, allow_schema_evolution
-        )
-
-        # two-phase: stage the merged touched partitions (reading `existing`
-        # and overwriting it in one job is illegal), then dynamic-overwrite —
-        # only partitions present in the staged data are replaced. The
-        # staging copy is deleted after the commit lands.
-        staging = target_path + ".staging"
-        _write_bucketed(merged, staging, clustered=True)
-        (
-            spark.read.parquet(staging)
-            .write.partitionBy("__bucket")
-            .mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(target_path)
-        )
-        fs_delete(spark, staging)
-        return touched
-    finally:
-        batch.unpersist()
-
-
 def hadoop_fs(spark, path: str):
     """(FileSystem, Path) for any Hadoop-supported scheme — the shared
     filesystem door for every module that checks/renames/deletes paths
@@ -308,7 +158,7 @@ def fs_delete(spark, path: str) -> None:
 
 def fs_write_text(spark, path: str, text: str) -> None:
     """Small text file via the Hadoop FS API (works for file://, hdfs://,
-    s3a:// alike — sidecar metadata must live wherever the target lives)."""
+    s3a:// alike — manifests must live wherever the table lives)."""
     fs, hpath = hadoop_fs(spark, path)
     out = fs.create(hpath, True)
     try:
@@ -327,17 +177,3 @@ def fs_read_text(spark, path: str) -> str:
         )
     finally:
         stream.close()
-
-
-def _write_bucketed(df: DataFrame, path: str, clustered: bool = False) -> None:
-    """partitionBy write with small-file control: hash-cluster rows by
-    __bucket first so each partition directory gets one file per writing
-    task that owns the bucket (≈1), not one per (task × bucket). At 100 TB
-    per-bucket volume grows and the cluster shuffle is what keeps a commit
-    from spraying n_tasks × n_buckets tiny files. Pass clustered=True when
-    the input is already hash(__bucket)-clustered (`merge_clustered`
-    output) — adding a second repartition would just re-shuffle the same
-    rows (guide §2.4)."""
-    if not clustered:
-        df = df.repartition(F.col("__bucket"))
-    df.write.partitionBy("__bucket").mode("overwrite").parquet(path)

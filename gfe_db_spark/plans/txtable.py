@@ -1,13 +1,14 @@
-"""Reader-isolated commits over plain parquet: a manifest-pointer table.
+"""Reader-isolated commits over plain parquet: a manifest-pointer table —
+the engine's one commit protocol for the graph, the accession registry and
+the streaming sink.
 
-`plans/merge.py`'s `partitioned_upsert` is O(batch) per commit, but its
-final dynamic partition overwrite mutates the live table directory — a
-concurrent reader can observe a half-swapped partition mix (the round-4
-verdict's one open durability item). The reference never has this problem
-because its store is transactional (Neo4j: ``load.cyp:9`` batches inside
-``apoc.periodic.iterate`` transactions). This module closes the gap on
-plain parquet with the same trick every log-structured table format uses
-(Delta's ``_delta_log/N.json``, Iceberg's snapshot pointer):
+The reference's store is transactional (Neo4j: ``load.cyp:9`` batches
+inside ``apoc.periodic.iterate`` transactions), so a reader never sees a
+half-loaded release. Rewriting live parquet directories in place cannot
+give that: a concurrent reader would observe a half-swapped partition mix.
+This module gets the same guarantee on plain parquet with the trick every
+log-structured table format uses (Delta's ``_delta_log/N.json``, Iceberg's
+snapshot pointer):
 
 Layout::
 
@@ -79,7 +80,6 @@ from gfe_db_spark.plans.merge import (
     bucket_expr,
     merge_clustered,
     fs_delete,
-    fs_exists,
     fs_read_text,
     fs_write_text,
     hadoop_fs,
@@ -179,7 +179,7 @@ def read_manifest(
 ) -> dict | None:
     """The table's manifest — latest, or pinned to `generation` (a reader
     holding a graph-level snapshot resolves every table at its pinned
-    generation; see plans/load.upsert_graph layout='tx')."""
+    generation; see plans/load.upsert_graph)."""
     n = current_manifest_number(spark, root) if generation is None else generation
     if n is None:
         return None
@@ -410,8 +410,7 @@ def _prepare_upsert(
         gen_name = _new_gen_name(next_n)
         gen_dir = f"{root.rstrip('/')}/{gen_name}"
         # each partition dir gets ~1 file per commit: the merge output is
-        # already hash(__bucket)-clustered (same small-file discipline as
-        # merge._write_bucketed)
+        # already hash(__bucket)-clustered, so no writer repartition
         merged.write.partitionBy("__bucket").mode("overwrite").parquet(gen_dir)
         for b in touched:
             new_buckets[str(b)] = gen_name
@@ -445,12 +444,13 @@ def tx_upsert(
     grace_seconds: float = DEFAULT_GRACE_SECONDS,
 ) -> list[int]:
     """MERGE `batch` into the manifest-pointer table at `root`; returns the
-    touched bucket list. Same merge semantics and O(batch + touched
-    partitions) cost as `plans/merge.partitioned_upsert` — but the commit
-    is a fresh uniquely-named generation dir + an atomic manifest rename,
-    so concurrent readers always see a complete before- or after-state,
-    never the half-swapped partition mix of an in-place dynamic overwrite,
-    and a conflicting writer cleans up only its own staging dir.
+    touched bucket list. Cost is O(batch + touched buckets): only the
+    buckets the batch hashes to are read, merged (`plans/merge` rules) and
+    written. The commit is a fresh uniquely-named generation dir + an
+    atomic manifest rename, so concurrent readers always see a complete
+    before- or after-state, and a conflicting writer cleans up only its
+    own staging dir. A commit with a different `n_buckets` than the table
+    was created with raises ValueError (it would mis-bucket keys).
     `grace_seconds` tunes the commit-start GC's defense-in-depth age
     check (see `tx_recover` — correctness does not depend on it)."""
     spark = batch.sparkSession
@@ -553,7 +553,7 @@ def tx_vacuum(
 
     `pin_generations` — extra manifest NUMBERS that must stay retained
     regardless of the window. A table that is a member of a graph-level
-    manifest (plans/load.upsert_graph layout='tx') is pinned to a fixed
+    manifest (plans/load.upsert_graph) is pinned to a fixed
     generation per graph snapshot; vacuuming a member table directly with
     no pins can prune the very manifest the graph manifest still
     references (e.g. after two compactions), breaking `GraphTables.load`
@@ -688,20 +688,17 @@ def txlog_segment_count(spark: SparkSession, root: str) -> int:
 
 
 def read_table(spark: SparkSession, root: str) -> DataFrame:
-    """Layout-detecting read: manifest-pointer tables (a `_manifests`
-    child) resolve through `tx_read`/`txlog_read`; anything else is the
-    in-place bucketed layout (`plans/merge.read_bucketed`). The one call
-    sinks' consumers need now that `layout="tx"` is the default — a plain
+    """Snapshot read of either manifest-pointer shape: a segment log
+    resolves through `txlog_read`, a bucket-map table through `tx_read`.
+    The one call sinks' consumers need — a plain
     ``spark.read.parquet(root)`` on a tx table would union EVERY retained
     generation."""
-    from gfe_db_spark.plans.merge import read_bucketed
-
-    if fs_exists(spark, _manifest_dir(root)):
-        m = read_manifest(spark, root)
-        if m is not None and "segments" in m:
-            out = txlog_read(spark, root)
-            if out is None:
-                raise FileNotFoundError(f"empty segment log at {root}")
-            return out
-        return tx_read(spark, root)
-    return read_bucketed(spark, root)
+    m = read_manifest(spark, root)
+    if m is None:
+        raise FileNotFoundError(f"no committed manifest under {root}")
+    if "segments" in m:
+        out = txlog_read(spark, root)
+        if out is None:
+            raise FileNotFoundError(f"empty segment log at {root}")
+        return out
+    return tx_read(spark, root)

@@ -212,7 +212,7 @@ def stream_upsert_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         q.processAllAvailable()
         q.stop()
     return (
-        read_table(spark, target)  # layout-aware: the sink is tx by default
+        read_table(spark, target)  # manifest-resolving snapshot read
         .groupBy("user_id")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
@@ -790,7 +790,7 @@ def stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     changelog apply — same oracle as `cdc_apply_changelog`.
 
     Scale: per-batch cost is O(batch + |state|) here; with the bucketed
-    `partitioned_upsert` target (plans/merge.py) the state rewrite prunes
+    `tx_upsert` target (plans/txtable.py) the state rewrite prunes
     to touched buckets — the production swap, unchanged semantics."""
     import os
     import shutil

@@ -4,7 +4,10 @@ The reference's orchestration stack (EventBridge cron → Lambda state diff →
 Step Functions → Batch/SSM, `invoke_pipeline/app.py` + `pipeline.asl.json`)
 collapses into: a watermark state document, an anti-join new-release
 detection, a monotonicity guard, and serialized build→load→commit per
-release with idempotent MERGE semantics.
+release with idempotent MERGE semantics. Every commit — graph tables,
+graph manifest, accession registry — goes through the manifest-pointer
+protocol (`plans/txtable.py`), so a reader polling during a release load
+always resolves one complete before/after snapshot.
 """
 
 from __future__ import annotations
@@ -167,7 +170,6 @@ def run_incremental(
     state_path: str,
     registry_path: str,
     graph_path: str,
-    layout: str = "tx",
     n_buckets: int = 16,
     vacuum_every: int | None = 8,
     keep_graph_manifests: int = 2,
@@ -181,14 +183,11 @@ def run_incremental(
     are fully partition-parallel. Replaying a committed release is a no-op
     (ST3: MERGE idempotence + watermark skip).
 
-    `layout="tx"` (the default since r7) commits each graph table through
-    the reader-isolated manifest-pointer protocol (plans/txtable.py): a
-    reader polling the graph DURING a release load always sees one
-    complete before/after snapshot — the isolation the reference gets
-    from Neo4j transactions (ref load.cyp:9). `layout="inplace"` is the
-    documented opt-out: the cheaper dynamic-overwrite commit for strictly
-    single-reader deployments (its swap window is visible to a concurrent
-    reader)."""
+    Each graph table commits through the reader-isolated manifest-pointer
+    protocol (plans/txtable.py): a reader polling the graph DURING a
+    release load always sees one complete before/after snapshot — the
+    isolation the reference gets from Neo4j transactions (ref
+    load.cyp:9)."""
     state = ReleaseState.load(state_path)
     new = detect_new_releases(available_releases, state)
 
@@ -217,15 +216,14 @@ def run_incremental(
         # its validation queries before AND after load so deltas are
         # observable, pipeline.asl.json:4-9,223-228)
         pre = validation_snapshot(graph)
-        # partition-pruned MERGE commit: each table rewrites only the key
-        # buckets this release touches (plans/merge.py), not the whole
+        # bucket-pruned MERGE commit: each table rewrites only the key
+        # buckets this release touches (plans/txtable.py), not the whole
         # accumulated graph. Commit order = data first, then state
         # (crash-safe: a replayed release re-MERGEs idempotently, ST3).
         upsert_graph(
             load_release(spark, tables, release),
             graph_path,
             n_buckets=n_buckets,
-            layout=layout,
         )
         graph = GraphTables.load(spark, graph_path)
         post = validation_snapshot(graph)
@@ -247,7 +245,7 @@ def run_incremental(
         # `keep_graph_manifests` snapshots; a reader that resolved any
         # retained snapshot still finds every file it resolved, and
         # provably-superseded generations are reclaimed immediately.
-        if layout == "tx" and vacuum_every is not None:
+        if vacuum_every is not None:
             from gfe_db_spark.plans.load import _graph_manifest_dir, vacuum_graph
             from gfe_db_spark.plans.txtable import _list_names
 

@@ -1,6 +1,7 @@
 """Structured Streaming operators (beyond the reference's batch-incremental
 model): file-source streams, watermarked windowed aggregation, session
-windows, and an idempotent foreachBatch upsert sink.
+windows, and an idempotent foreachBatch upsert sink (a manifest-pointer
+table, `plans/txtable.py`, so readers of the sink see whole micro-batches).
 
 These are the streaming forms of the batch queries in
 `queries/streaming.py`; local tests drive them with the parquet file
@@ -143,28 +144,17 @@ def foreach_batch_upsert(
     target_path: str,
     keys: list[str],
     n_buckets: int = 32,
-    layout: str = "tx",
 ):
     """ST3: exactly-once-ish idempotent sink — per micro-batch MERGE into a
-    key-bucketed parquet target: only the partitions whose buckets the
-    batch touches are read and rewritten, so sink cost is O(batch), not
-    O(table). `layout="tx"` (the default since r7) routes each micro-batch
-    commit through the reader-isolated manifest-pointer protocol
-    (plans/txtable.tx_upsert): concurrent readers of the sink table always
-    resolve one complete snapshot, never a half-swapped partition mix.
-    `layout="inplace"` is the documented opt-out (dynamic partition
-    overwrite; cheaper, but a concurrent reader can see the swap window).
-    Delta MERGE INTO would replace this body unchanged on a Delta-enabled
-    cluster."""
-    from gfe_db_spark.plans.merge import partitioned_upsert
+    key-bucketed manifest-pointer table (plans/txtable.tx_upsert): only the
+    buckets the batch touches are read and rewritten, so sink cost is
+    O(batch), not O(table), and concurrent readers of the sink always
+    resolve one complete snapshot. Delta MERGE INTO would replace this
+    body unchanged on a Delta-enabled cluster."""
     from gfe_db_spark.plans.txtable import tx_upsert
 
-    if layout not in ("inplace", "tx"):  # a typo must not silently drop
-        raise ValueError(f"unknown sink layout {layout!r}")  # isolation
-    do_upsert = tx_upsert if layout == "tx" else partitioned_upsert
-
     def upsert(batch_df: DataFrame, epoch_id: int) -> None:
-        do_upsert(batch_df, target_path, keys, on_match="update", n_buckets=n_buckets)
+        tx_upsert(batch_df, target_path, keys, on_match="update", n_buckets=n_buckets)
 
     return stream_df.writeStream.foreachBatch(upsert).outputMode("update")
 
@@ -177,8 +167,8 @@ def cdc_merge_sink(state_path: str):
     out-of-order older update in a later batch cannot resurrect a deleted
     key; readers drop them via `cdc_current_snapshot`.
 
-    At scale the state swap becomes `plans/merge.partitioned_upsert`
-    (only touched buckets rewritten); semantics unchanged. Input batches
+    At scale the state swap becomes `plans/txtable.tx_upsert` (only
+    touched buckets rewritten); semantics unchanged. Input batches
     need columns (key, version_ts, version_seq, op, value)."""
     import os
     import shutil

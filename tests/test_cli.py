@@ -63,12 +63,18 @@ def test_cli_query_and_list(spark, tmp_path, capsys):
 
 def test_cli_snapshot_roundtrip(spark, tmp_path, capsys):
     """snapshot save → list → restore round-trips the graph through the
-    versioned store from the command surface."""
+    versioned store from the command surface. The restored graph is a
+    live graph the next `load` extends, and restoring over a path that
+    already holds a graph is refused (non-zero exit, graph intact)."""
     import json
+    import shutil
+
+    from gfe_db_spark.plans.load import GraphTables
 
     remote = tmp_path / "remote"
     remote.mkdir()
     fx.write_release_dat(str(remote), "3550")
+    fx.write_release_dat(str(remote), "3560")
     manifest = tmp_path / "m.json"
     manifest.write_text(json.dumps({
         "releases": {"3550": f"file://{remote}/hla.3550.dat"}
@@ -87,13 +93,30 @@ def test_cli_snapshot_roundtrip(spark, tmp_path, capsys):
     assert "v0001" in capsys.readouterr().out
     restored = tmp_path / "graph2"
     assert main(["snapshot", "restore", "--root", root, "--graph", str(restored)]) == 0
-    # the live graph is tx-layout by default since r7 (snapshot exports
-    # stay plain parquet) — read it layout-aware
-    from gfe_db_spark.plans.txtable import read_table
+    n_live = GraphTables.load(spark, str(graph)).nodes_gfe.count()
+    n_restored = GraphTables.load(spark, str(restored)).nodes_gfe.count()
+    assert n_live == n_restored > 0
 
-    a = read_table(spark, str(graph / "nodes_gfe"))
-    b = spark.read.parquet(str(restored / "nodes_gfe"))
-    assert a.count() == b.count() > 0
+    # restore over the live graph: refused, and the live graph still loads
+    assert main(["snapshot", "restore", "--root", root, "--graph", str(graph)]) != 0
+    assert "already holds data" in capsys.readouterr().err
+    assert GraphTables.load(spark, str(graph)).nodes_gfe.count() == n_live
+
+    # restore-then-load: the next release commits onto the restored graph
+    shutil.copy(tmp_path / "state.json", tmp_path / "state2.json")
+    manifest2 = tmp_path / "m2.json"
+    manifest2.write_text(json.dumps({
+        "releases": {r: f"file://{remote}/hla.{r}.dat" for r in ("3550", "3560")}
+    }))
+    assert main([
+        "load", "--manifest", f"file://{manifest2}",
+        "--staging", str(tmp_path / "st"),
+        "--state", str(tmp_path / "state2.json"),
+        "--registry", str(tmp_path / "reg"),
+        "--graph", str(restored),
+    ]) == 0
+    assert "processed=['3560']" in capsys.readouterr().out
+    assert GraphTables.load(spark, str(restored)).nodes_gfe.count() >= n_restored
 
 
 def test_cli_load_from_manifest(spark, tmp_path):

@@ -107,34 +107,19 @@ def test_recover_refuses_partial_staging_without_target(spark, tmp_path):
 
 
 def test_compaction_composes_with_bucketed_upsert(spark, tmp_path):
-    """Compacting a partitioned_upsert target must preserve the __bucket
-    directory layout and the n_buckets sidecar (it lives NEXT to the dir,
-    outside the swap), so subsequent commits keep pruning correctly."""
-    from pyspark.sql import functions as F
-
-    from gfe_db_spark.plans.merge import partitioned_upsert, read_bucketed
+    """Compacting a key-bucketed ``__bucket=`` hive dir (the bucketing of
+    the MERGE substrate, `plans/merge.bucket_expr`) must keep every row in
+    the bucket directory its key hashes to, so bucket-pruned reads stay
+    exact after the rewrite."""
+    from gfe_db_spark.plans.merge import bucket_expr
 
     target = str(tmp_path / "t")
     base = spark.range(500).selectExpr("id AS k", "id * 2 AS v")
-    partitioned_upsert(base, target, ["k"], n_buckets=4)
-    # upsert commits themselves keep ~1 file per touched bucket (the
-    # repartition in _write_bucketed — verified by the assert below), so
-    # fragment the target the way an external/legacy writer would: rewrite
-    # the same contents as 10 files per bucket, sidecar left in place
-    for i in range(3):
-        one = spark.createDataFrame([(i, -i)], "k long, v long")
-        partitioned_upsert(one, target, ["k"], n_buckets=4)
-    assert file_stats(spark, target).count() == 4, "upsert should not fragment"
-    frag = spark.read.parquet(target).repartition(10)
-    frag.write.partitionBy("__bucket").mode("overwrite").option(
-        "partitionOverwriteMode", "static"
-    ).parquet(target + ".tmp")
-    from gfe_db_spark.plans.merge import fs_delete, hadoop_fs
-
-    fs, _ = hadoop_fs(spark, target)
-    HPath = spark._jvm.org.apache.hadoop.fs.Path
-    fs_delete(spark, target)
-    fs.rename(HPath(target + ".tmp"), HPath(target))
+    # fragment the target the way an external writer would: 10 tasks, each
+    # writing a file into every bucket directory
+    base.withColumn("__bucket", bucket_expr(["k"], 4)).repartition(10).write.partitionBy(
+        "__bucket"
+    ).parquet(target)
     assert file_stats(spark, target).count() > 4
 
     stats = compact_small_files(
@@ -143,39 +128,43 @@ def test_compaction_composes_with_bucketed_upsert(spark, tmp_path):
     assert stats.files_after < stats.files_before
     assert stats.rows == 500
 
-    # sidecar survived → the next commit still merges (a changed bucket
-    # count would raise; a lost sidecar would silently re-adopt)
-    import os
-
-    assert os.path.exists(target + ".n_buckets")
-    partitioned_upsert(
-        spark.createDataFrame([(42, 999)], "k long, v long"), target, ["k"], n_buckets=4
-    )
-    out = read_bucketed(spark, target)
+    out = spark.read.parquet(target)
     assert out.count() == 500
-    assert out.filter("k = 42").first().v == 999
-    assert {r.v for r in out.filter("k < 3").collect()} == {0, -1, -2}
+    assert out.agg(F.sum("v")).first()[0] == 2 * sum(range(500))
+    # every row still sits in the bucket its key hashes to
+    assert out.filter(F.col("__bucket") != bucket_expr(["k"], 4)).count() == 0
+    one = out.filter("__bucket = 1")
+    plan = one._jdf.queryExecution().executedPlan().toString()
+    assert "PartitionFilters" in plan
+    assert 0 < one.count() < 500
 
 
 def test_compaction_unifies_evolved_schema(spark, tmp_path):
-    """Compacting a schema-evolved MERGE target must read through
-    mergeSchema (a plain read samples one footer and would silently drop
-    the evolved column) and, as a side effect, rewrite every file with
-    the full schema so plain reads work again afterwards."""
-    from gfe_db_spark.plans.merge import partitioned_upsert, read_bucketed
+    """Compacting a target whose files disagree on schema (a later append
+    added a column to one bucket) must read through mergeSchema (a plain
+    read samples one footer and would silently drop the added column) and,
+    as a side effect, rewrite every file with the full schema so plain
+    reads work again afterwards."""
+    from gfe_db_spark.plans.merge import bucket_expr
 
     target = str(tmp_path / "t")
-    base = spark.createDataFrame([(i, "x") for i in range(100)], "k long, v string")
-    partitioned_upsert(base, target, ["k"], n_buckets=4)
+    base = spark.createDataFrame(
+        [(i, "x") for i in range(100) if i != 1], "k long, v string"
+    )
+    base.withColumn("__bucket", bucket_expr(["k"], 4)).write.partitionBy(
+        "__bucket"
+    ).parquet(target)
     widened = spark.createDataFrame([(1, "y", 7)], "k long, v string, extra long")
-    partitioned_upsert(widened, target, ["k"], n_buckets=4, allow_schema_evolution=True)
+    widened.withColumn("__bucket", bucket_expr(["k"], 4)).write.partitionBy(
+        "__bucket"
+    ).mode("append").parquet(target)
 
     stats = compact_small_files(
         spark, target, target_bytes=10 * 1024 * 1024, partition_by=["__bucket"]
     )
     assert stats.rows == 100
-    # plain read (no mergeSchema) now sees the evolved column everywhere
-    out = read_bucketed(spark, target)
+    # plain read (no mergeSchema) now sees the added column everywhere
+    out = spark.read.parquet(target)
     assert "extra" in out.columns
     got = {r.k: r.extra for r in out.filter("k <= 2").collect()}
     assert got[1] == 7 and got[0] is None and got[2] is None

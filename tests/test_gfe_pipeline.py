@@ -519,7 +519,7 @@ def test_doc_literal_cypher_query(spark, tmp_path):
 
 
 def test_tx_layout_reader_isolated_during_release_load(spark, tmp_path_factory):
-    """Round-5 verdict item 3: with `layout="tx"`, a reader polling the
+    """Round-5 verdict item 3: a reader polling the
     graph DURING an incremental release load always resolves one
     cross-table-consistent snapshot — whole graph before the load or
     whole graph after it, never release N's nodes with release N-1's
@@ -528,8 +528,8 @@ def test_tx_layout_reader_isolated_during_release_load(spark, tmp_path_factory):
     has its HAS_SEQUENCE edge and every IPD_Allele its HAS_IPD_ALLELE
     edge (each release adds 3 alleles to all four tables, and the 11
     table commits run concurrently, so a non-atomic reader WOULD observe
-    the counts drifting apart mid-load). The in-place layout documents
-    exactly this torn window; the graph-level manifest closes it."""
+    the counts drifting apart mid-load). The graph-level manifest closes
+    that torn window."""
     import threading
 
     import pyspark.sql.functions as SF
@@ -548,7 +548,7 @@ def test_tx_layout_reader_isolated_during_release_load(spark, tmp_path_factory):
 
     # first release committed before polling starts (the graph-level
     # manifest exists from the first tx commit onward)
-    res = run_incremental(spark, tmp, releases[:1], state, reg, graph_path, layout="tx")
+    res = run_incremental(spark, tmp, releases[:1], state, reg, graph_path)
     assert res.processed == releases[:1]
 
     errors: list[AssertionError] = []
@@ -587,7 +587,7 @@ def test_tx_layout_reader_isolated_during_release_load(spark, tmp_path_factory):
     t = threading.Thread(target=poll)
     t.start()
     try:
-        res = run_incremental(spark, tmp, releases, state, reg, graph_path, layout="tx")
+        res = run_incremental(spark, tmp, releases, state, reg, graph_path)
         assert res.processed == releases[1:]
     finally:
         done.set()
@@ -595,8 +595,8 @@ def test_tx_layout_reader_isolated_during_release_load(spark, tmp_path_factory):
     assert not errors, errors
     g = GraphTables.load(spark, graph_path)
     assert g.nodes_gfe.count() == 15
-    # replay on the tx layout is a no-op, same as in-place (ST3)
-    res = run_incremental(spark, tmp, releases, state, reg, graph_path, layout="tx")
+    # replay is a no-op (ST3)
+    res = run_incremental(spark, tmp, releases, state, reg, graph_path)
     assert res.processed == [] and res.rejected == []
 
 
@@ -704,14 +704,16 @@ def test_reference_depth_47_release_history(spark, tmp_path_factory):
 
 
 def test_graph_layout_switch_is_refused(spark, tmp_path_factory):
-    """Committing with the WRONG layout against an existing graph is a
-    silent-data-loss hazard (tx sees an empty table and publishes a
-    manifest hiding the bucketed dirs; inplace writes dirs the
-    manifest-resolving reader never consults) — upsert_graph must refuse
-    both directions (r6 review fix)."""
+    """A tx commit into a graph path holding non-manifest data would start
+    from an empty table and publish a graph manifest hiding that data —
+    upsert_graph must refuse it. Only the tx layout is accepted, and a
+    load that crashed before its first graph-manifest publish replays
+    cleanly."""
+    import shutil as _shutil
+
     import pytest as _pytest
 
-    from gfe_db_spark.plans.load import load_release, upsert_graph
+    from gfe_db_spark.plans.load import GraphTables, load_release, upsert_graph
     from gfe_db_spark.plans.accession import AccessionRegistry
     from gfe_db_spark.plans.build import build_release
     from gfe_db_spark.sources.imgt import read_imgt_dat
@@ -726,33 +728,30 @@ def test_graph_layout_switch_is_refused(spark, tmp_path_factory):
     )
     g = load_release(spark, built, "3550")
 
-    inplace_path = str(tmp / "g_inplace")
-    upsert_graph(g, inplace_path, layout="inplace")
-    with _pytest.raises(ValueError, match="in-place bucketed layout"):
-        upsert_graph(g, inplace_path, layout="tx")
+    plain_path = str(tmp / "g_plain")
+    g.save(plain_path)  # plain parquet tables, no manifests
+    with _pytest.raises(ValueError, match="holds non-manifest data"):
+        upsert_graph(g, plain_path)
 
     tx_path = str(tmp / "g_tx")
-    upsert_graph(g, tx_path, layout="tx")
-    with _pytest.raises(ValueError, match="tx .manifest-pointer. layout"):
+    with _pytest.raises(ValueError, match="only 'tx'"):
         upsert_graph(g, tx_path, layout="inplace")
-    # correct layouts still replay fine on both
-    upsert_graph(g, inplace_path, layout="inplace")
     upsert_graph(g, tx_path, layout="tx")
+    upsert_graph(g, tx_path)  # replay
 
     # crash-window gap (r7 advice): a tx load that died after SOME table
     # commits but before the FIRST graph-manifest publish leaves
-    # per-table _manifests with no _graph_manifests. An inplace commit
-    # must STILL be refused — it would write bucketed dirs that
-    # tx-resolving readers never consult.
-    import shutil as _shutil
-
+    # per-table _manifests with no _graph_manifests; the next commit
+    # recovers the crashed load by republishing
     crash_path = str(tmp / "g_crash")
-    upsert_graph(g, crash_path, layout="tx")
+    upsert_graph(g, crash_path)
     _shutil.rmtree(f"{crash_path}/_graph_manifests")
-    with _pytest.raises(ValueError, match="tx .manifest-pointer. layout"):
-        upsert_graph(g, crash_path, layout="inplace")
-    # the tx direction recovers the crashed load by republishing
-    upsert_graph(g, crash_path, layout="tx")
+    upsert_graph(g, crash_path)
+    assert (
+        GraphTables.load(spark, crash_path).nodes_gfe.count()
+        == GraphTables.load(spark, tx_path).nodes_gfe.count()
+        > 0
+    )
 
 
 def test_vacuum_graph_respects_graph_manifest_pins(spark, tmp_path_factory):
@@ -786,7 +785,7 @@ def test_vacuum_graph_respects_graph_manifest_pins(spark, tmp_path_factory):
     )
     g = load_release(spark, built, "3550")
     graph_path = str(tmp / "graph")
-    upsert_graph(g, graph_path, layout="tx")  # graph manifest 1
+    upsert_graph(g, graph_path)  # graph manifest 1
 
     # two compactions of a member table advance ITS generation while the
     # graph manifest still pins the load's generation
@@ -797,7 +796,7 @@ def test_vacuum_graph_respects_graph_manifest_pins(spark, tmp_path_factory):
     # the hazard, demonstrated: a pin-less per-table vacuum with a
     # 1-manifest window deletes the pinned manifest -> load breaks
     probe = str(tmp / "probe")
-    upsert_graph(g, probe, layout="tx")
+    upsert_graph(g, probe)
     TX.tx_compact(spark, f"{probe}/nodes_gfe")
     TX.tx_compact(spark, f"{probe}/nodes_gfe")
     TX.tx_vacuum(spark, f"{probe}/nodes_gfe", keep_manifests=1)
@@ -818,7 +817,7 @@ def test_vacuum_graph_respects_graph_manifest_pins(spark, tmp_path_factory):
     # graph manifests prune under the same contract: commit a second load
     # (graph manifest 2), vacuum keeping 1 -> manifest 1's file is gone,
     # the graph still loads at manifest 2
-    upsert_graph(g, graph_path, layout="tx")
+    upsert_graph(g, graph_path)
     removed = vacuum_graph(
         spark, graph_path, keep_graph_manifests=1, keep_manifests=2, grace_seconds=0
     )
@@ -835,8 +834,8 @@ def test_registry_tx_reader_isolated_during_append_and_compaction(
     forced compaction sees only complete snapshots: total row count is
     always one of the committed sizes (multiples of the batch size), the
     per-context numbering is dense 1..n at every poll, and no poll ever
-    errors on a half-swapped directory (the legacy layout's documented
-    hazard)."""
+    errors on a half-swapped directory (the hazard of rewriting a live
+    directory in place)."""
     import threading
 
     from gfe_db_spark.plans.accession import AccessionRegistry
@@ -893,12 +892,11 @@ def test_registry_tx_reader_isolated_during_append_and_compaction(
 
 
 def test_registry_layout_guard_refuses_mismatch(spark, tmp_path_factory):
-    """Committing against an existing registry with the WRONG layout must
-    raise (mirror of the graph layout-switch guard): a tx commit on a
-    legacy flat dir would hide the accumulated mapping behind an empty
-    manifest; an inplace append on a tx registry would write parts no
-    manifest-resolving reader consults."""
+    """A registry path holding parquet parts but no `_manifests` must be
+    refused, not read as an empty segment log: that would renumber its
+    accessions from 1 and break the permanent 1-to-1 mapping."""
     import pytest as _pytest
+    from pyspark.sql import functions as F
 
     from gfe_db_spark.plans.accession import AccessionRegistry
 
@@ -908,17 +906,15 @@ def test_registry_layout_guard_refuses_mismatch(spark, tmp_path_factory):
     )
     base = tmp_path_factory.mktemp("regguard")
 
-    legacy = str(base / "legacy")
-    AccessionRegistry(spark, legacy, layout="inplace").assign(feats, "3550")
-    with _pytest.raises(ValueError, match="uses the 'inplace' layout"):
-        AccessionRegistry(spark, legacy).load()
+    plain = str(base / "plain")
+    feats.withColumn("accession", F.lit(1)).withColumn(
+        "first_release", F.lit("3550")
+    ).write.parquet(plain)
+    with _pytest.raises(ValueError, match="parquet parts but no _manifests"):
+        AccessionRegistry(spark, plain).assign(feats, "3560")
 
     txreg = str(base / "txreg")
     AccessionRegistry(spark, txreg).assign(feats, "3550")
-    with _pytest.raises(ValueError, match="uses the 'tx' layout"):
-        AccessionRegistry(spark, txreg, layout="inplace").load()
-    # correct layouts keep working
-    assert AccessionRegistry(spark, legacy, layout="inplace").load().count() == 1
     assert AccessionRegistry(spark, txreg).load().count() == 1
 
 

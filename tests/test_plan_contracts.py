@@ -181,24 +181,6 @@ def test_copurchase_is_order_keyed_join(spark, specs):
     assert re.search(r"SortMergeJoin|ShuffledHashJoin|BroadcastHashJoin", plan)
 
 
-def test_partitioned_upsert_scan_prunes_partitions(spark, tmp_path):
-    # The MERGE substrate's read of the existing target must show a
-    # partition filter on __bucket — the untouched-partition scan skip is
-    # the whole point of the design.
-    from pyspark.sql import functions as F
-
-    from gfe_db_spark.plans.merge import bucket_expr, partitioned_upsert
-
-    target = str(tmp_path / "t")
-    base = spark.range(0, 512).selectExpr("id AS k", "id AS v")
-    partitioned_upsert(base, target, ["k"], n_buckets=8)
-    scan = spark.read.parquet(target).filter(F.col("__bucket").isin([3]))
-    plan = plan_of(scan)
-    assert re.search(r"PartitionFilters: \[[^\]]*__bucket", plan), plan[:600]
-    # and a non-partition filter would NOT prune: guard the distinction
-    assert scan.count() < 512
-
-
 def test_ivf_index_probe_prunes_partitions(spark, tmp_path):
     # The materialized IVF index must be probed with partition pruning:
     # the scan shows a dynamic pruning expression on centroid_id, so a

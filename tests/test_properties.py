@@ -258,19 +258,17 @@ def test_bucketed_neardup_subset_and_probe_complete(spark):
 
 
 def test_registry_compaction_preserves_contents(spark, tmp_path_factory):
-    """10 sequential commits with a low compaction threshold: the registry
-    ends with ≤ max_files part files and the accession mapping is
-    byte-identical to what the commits assigned (compaction is a pure
-    file-layout rewrite)."""
+    """10 sequential commits with a low compaction threshold: the live
+    snapshot ends with ≤ max_files segments (≤ max_files part files) and
+    the accession mapping is identical to what the commits assigned
+    (compaction is a pure file-layout rewrite)."""
     import os
 
+    from gfe_db_spark.plans import txtable as TX
     from gfe_db_spark.plans.accession import AccessionRegistry
 
     path = str(tmp_path_factory.mktemp("reg") / "registry")
-    # pinned to the legacy flat-dir layout: this test asserts its
-    # top-level part-file bound; the tx layout's structural bounds are
-    # asserted in test_gfe_pipeline.test_registry_tx_* instead
-    reg = AccessionRegistry(spark, path, max_files=5, compact_files=2, layout="inplace")
+    reg = AccessionRegistry(spark, path, max_files=5, compact_files=2)
     assigned = {}
     for batch in range(10):
         feats = spark.createDataFrame(
@@ -282,60 +280,22 @@ def test_registry_compaction_preserves_contents(spark, tmp_path_factory):
             key = (r.locus, r.term, r.rank, r.sequence)
             assert assigned.get(key, r.accession) == r.accession
             assigned[key] = r.accession
-    n_parts = len([f for f in os.listdir(path) if f.endswith(".parquet")])
-    assert n_parts <= 5, f"{n_parts} part files after compaction"
+    segments = TX.read_manifest(spark, path)["segments"]
+    assert len(segments) <= 5, f"{len(segments)} segments after compaction"
+    n_parts = sum(
+        1
+        for seg in segments
+        for f in os.listdir(os.path.join(path, seg))
+        if f.endswith(".parquet")
+    )
+    # 10 un-compacted commits would leave 10 one-file segments
+    assert n_parts <= 6, f"{n_parts} part files after compaction"
     final = {
         (r.locus, r.term, r.rank, r.sequence): r.accession for r in reg.load().collect()
     }
     assert final == assigned
     # accessions are a bijection per context: 40 distinct seqs → 1..40
     assert sorted(final.values()) == list(range(1, 41))
-
-
-def test_registry_compaction_recovers_without_success_marker(spark, tmp_path_factory):
-    """Crash between delete and rename during compaction, on a cluster
-    where the committer's _SUCCESS marker is disabled: recovery promotes
-    the staged dir via the registry's own _COMPACTION_COMPLETE marker. A
-    staged dir with NO completion marker at all still refuses promotion."""
-    import os
-    import shutil
-
-    import pytest as _pytest
-
-    from gfe_db_spark.plans.accession import AccessionRegistry
-
-    path = str(tmp_path_factory.mktemp("reg") / "registry")
-    # legacy layout: the .compacting-marker recovery protocol under test
-    # exists only there (the tx layout needs no swap recovery)
-    reg = AccessionRegistry(spark, path, layout="inplace")
-    feats = spark.createDataFrame(
-        [("HLA-A", "exon", 1, f"S{i}") for i in range(4)],
-        "locus string, term string, rank int, sequence string",
-    )
-    reg.assign(feats, release="3550")
-    before = {(r.locus, r.term, r.rank, r.sequence): r.accession for r in reg.load().collect()}
-
-    # simulate the crash point: registry deleted, fully-written staged dir
-    # present with our marker but WITHOUT the committer's _SUCCESS
-    shutil.move(path, path + ".compacting")
-    open(path + ".compacting/_COMPACTION_COMPLETE", "w").write("ok")
-    success = path + ".compacting/_SUCCESS"
-    if os.path.exists(success):
-        os.remove(success)
-
-    after = {(r.locus, r.term, r.rank, r.sequence): r.accession for r in reg.load().collect()}
-    assert after == before
-    assert os.path.isdir(path) and not os.path.exists(path + ".compacting")
-    assert not os.path.exists(path + "/_COMPACTION_COMPLETE")
-
-    # a partial staged dir (no marker of either kind) must not be promoted
-    shutil.move(path, path + ".compacting")
-    for m in ("_COMPACTION_COMPLETE", "_SUCCESS"):
-        p = os.path.join(path + ".compacting", m)
-        if os.path.exists(p):
-            os.remove(p)
-    with _pytest.raises(RuntimeError, match="manual recovery"):
-        reg.load()
 
 
 @given(

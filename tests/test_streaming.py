@@ -155,7 +155,7 @@ def test_foreach_batch_upsert(spark, tmp_path):
     q = writer.start()
     q.processAllAvailable()
     q.stop()
-    n1 = read_table(spark, target).count()  # sink is tx-layout by default
+    n1 = read_table(spark, target).count()  # the sink is a manifest table
     assert n1 == 1000
     # replaying the same input is idempotent (ST3)
     events2 = read_event_stream(spark, f"{SF_SMOKE}/events.parquet")
@@ -166,47 +166,51 @@ def test_foreach_batch_upsert(spark, tmp_path):
     assert read_table(spark, target).count() == n1
 
 
-def test_partitioned_upsert_rewrites_only_touched_buckets(spark, tmp_path):
-    """The MERGE substrate contract: a batch touching one key bucket reads
-    and rewrites exactly that partition directory — every other partition's
-    files are untouched (dynamic partition overwrite)."""
+def test_tx_upsert_rewrites_only_touched_buckets(spark, tmp_path):
+    """The MERGE substrate contract: a batch touching one key bucket writes
+    exactly that bucket, into a fresh generation dir — every file already
+    on disk stays byte-for-byte and mtime untouched, and the other buckets
+    keep resolving to it."""
     import os
 
-    from gfe_db_spark.plans.merge import partitioned_upsert, read_bucketed
+    from gfe_db_spark.plans.txtable import read_table, tx_upsert
 
     target = str(tmp_path / "t")
     base = spark.range(0, 1000).selectExpr("id AS k", "id * 2 AS v")
-    partitioned_upsert(base, target, ["k"], n_buckets=8)
+    tx_upsert(base, target, ["k"], n_buckets=8)
 
     def inventory():
         inv = {}
-        for d in os.listdir(target):
-            if d.startswith("__bucket="):
-                files = {}
-                for f in os.listdir(os.path.join(target, d)):
-                    p = os.path.join(target, d, f)
-                    files[f] = (os.path.getsize(p), os.path.getmtime(p))
-                inv[d] = files
+        for gen in os.listdir(target):
+            if not gen.startswith("gen-"):
+                continue
+            for d in os.listdir(os.path.join(target, gen)):
+                if d.startswith("__bucket="):
+                    for f in os.listdir(os.path.join(target, gen, d)):
+                        p = os.path.join(target, gen, d, f)
+                        inv[p] = (os.path.getsize(p), os.path.getmtime(p))
         return inv
 
     before = inventory()
-    assert len(before) == 8
+    assert {p.split(os.sep)[-2] for p in before} == {f"__bucket={b}" for b in range(8)}
 
     one = spark.createDataFrame([(42, -1)], "k long, v long")
-    touched = partitioned_upsert(one, target, ["k"], n_buckets=8)
+    touched = tx_upsert(one, target, ["k"], n_buckets=8)
     assert len(touched) == 1
 
     after = inventory()
-    changed = {d for d in after if after[d] != before.get(d)}
-    assert changed == {f"__bucket={touched[0]}"}
+    assert {p: after[p] for p in before} == before  # nothing rewritten in place
+    assert {p.split(os.sep)[-2] for p in set(after) - set(before)} == {
+        f"__bucket={touched[0]}"
+    }
 
-    out = read_bucketed(spark, target)
+    out = read_table(spark, target)
     assert out.count() == 1000  # upsert, not append
     assert out.filter("k = 42").collect()[0].v == -1  # ON MATCH SET wins
     # create_only: existing row survives, new key inserted
     two = spark.createDataFrame([(42, 777), (5000, 1)], "k long, v long")
-    partitioned_upsert(two, target, ["k"], on_match="create_only", n_buckets=8)
-    out = read_bucketed(spark, target)
+    tx_upsert(two, target, ["k"], on_match="create_only", n_buckets=8)
+    out = read_table(spark, target)
     assert out.count() == 1001
     assert out.filter("k = 42").collect()[0].v == -1
 
@@ -288,35 +292,6 @@ def test_progress_heartbeat_listener(spark, tmp_path):
     rows = sum(ln.get("num_input_rows", 0) for ln in lines if ln["event"] == "progress")
     batch = spark.read.parquet(f"{SF_SMOKE}/events.parquet")
     assert rows == batch.count()
-
-
-def test_partitioned_upsert_cleans_staging_and_bootstrap_merge(spark, tmp_path):
-    """Review regressions: the staging copy is deleted after a commit; a
-    merge_fn is applied on the bootstrap commit too."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from gfe_db_spark.plans.merge import partitioned_upsert, read_bucketed
-
-    target = str(tmp_path / "t")
-
-    def combine(existing, batch):
-        return (
-            existing.unionByName(batch)
-            .groupBy("k", "__bucket")
-            .agg(F.sum("v").alias("v"))
-        )
-
-    dup = spark.createDataFrame([(1, 10), (1, 5), (2, 1)], "k long, v long")
-    partitioned_upsert(dup, target, ["k"], merge_fn=combine, n_buckets=4)
-    got = {r.k: r.v for r in read_bucketed(spark, target).collect()}
-    assert got == {1: 15, 2: 1}  # combined on bootstrap, not written raw
-    more = spark.createDataFrame([(1, 1)], "k long, v long")
-    partitioned_upsert(more, target, ["k"], merge_fn=combine, n_buckets=4)
-    got = {r.k: r.v for r in read_bucketed(spark, target).collect()}
-    assert got == {1: 16, 2: 1}
-    assert not os.path.exists(target + ".staging")  # staging cleaned up
 
 
 def test_ewma_matches_plain_recurrence(spark):
@@ -434,88 +409,6 @@ def test_stream_dedup_replay_across_batches(spark, tmp_path):
         assert spark.table(name).count() == n_one_copy
     finally:
         q.stop()
-
-
-def test_partitioned_upsert_rejects_bucket_count_change(spark, tmp_path):
-    """A later commit with a different n_buckets would silently mis-bucket
-    keys (missed matches → duplicate-key appends); the recorded sidecar
-    turns that into a hard error."""
-    import pytest as _pytest
-
-    from gfe_db_spark.plans.merge import partitioned_upsert, read_bucketed
-
-    target = str(tmp_path / "t")
-    base = spark.range(0, 100).selectExpr("id AS k", "id AS v")
-    partitioned_upsert(base, target, ["k"], n_buckets=8)
-    with _pytest.raises(ValueError, match="bucket-count mismatch"):
-        partitioned_upsert(base, target, ["k"], n_buckets=16)
-    # same count still works, and the target stayed consistent
-    partitioned_upsert(base, target, ["k"], n_buckets=8)
-    assert read_bucketed(spark, target).count() == 100
-
-
-def test_partitioned_upsert_adopts_legacy_target(spark, tmp_path):
-    """Targets created before the sidecar existed are adopted on the next
-    commit: the current n_buckets is recorded, then enforced."""
-    import os
-
-    import pytest as _pytest
-
-    from gfe_db_spark.plans.merge import partitioned_upsert
-
-    target = str(tmp_path / "t")
-    base = spark.range(0, 100).selectExpr("id AS k", "id AS v")
-    partitioned_upsert(base, target, ["k"], n_buckets=8)
-    os.remove(target + ".n_buckets")  # simulate a pre-sidecar target
-    partitioned_upsert(base, target, ["k"], n_buckets=8)
-    assert open(target + ".n_buckets").read().strip() == "8"
-    with _pytest.raises(ValueError, match="bucket-count mismatch"):
-        partitioned_upsert(base, target, ["k"], n_buckets=4)
-
-
-def test_partitioned_upsert_recovers_from_crashed_commit(spark, tmp_path):
-    """Crash between the staging write and the dynamic overwrite leaves a
-    .staging dir and an untouched target; the next commit drops the
-    leftover and replaying the batch converges to the correct state."""
-    import os
-
-    from gfe_db_spark.plans import merge as M
-    from gfe_db_spark.plans.merge import partitioned_upsert, read_bucketed
-
-    target = str(tmp_path / "t")
-    base = spark.range(0, 100).selectExpr("id AS k", "id * 2 AS v")
-    partitioned_upsert(base, target, ["k"], n_buckets=4)
-
-    batch = spark.createDataFrame([(7, -1), (500, 1)], "k long, v long")
-    # simulate the crash: run the commit but fail right before the
-    # dynamic overwrite by making the staged read explode
-    real_write = M._write_bucketed
-    calls = []
-
-    def crashing_write(df, path, **kw):
-        real_write(df, path, **kw)
-        if path.endswith(".staging"):
-            calls.append(path)
-            raise RuntimeError("injected crash after staging write")
-
-    M._write_bucketed = crashing_write
-    try:
-        import pytest as _pytest
-
-        with _pytest.raises(RuntimeError, match="injected crash"):
-            partitioned_upsert(batch, target, ["k"], n_buckets=4)
-    finally:
-        M._write_bucketed = real_write
-    assert calls and os.path.exists(target + ".staging")
-    # target unchanged by the crashed commit
-    assert read_bucketed(spark, target).filter("k = 7").collect()[0].v == 14
-
-    # replay: leftover staging is dropped, merge lands
-    partitioned_upsert(batch, target, ["k"], n_buckets=4)
-    assert not os.path.exists(target + ".staging")
-    out = read_bucketed(spark, target)
-    assert out.count() == 101
-    assert out.filter("k = 7").collect()[0].v == -1
 
 
 def test_watermark_drops_late_data(spark, tmp_path):
@@ -669,36 +562,6 @@ def test_cdc_merge_sink_out_of_order_tombstone(spark, tmp_path):
     # raw state still holds the tombstone with full change history
     raw = {r.key: r for r in spark.read.parquet(state).collect()}
     assert raw[1].op == "D" and raw[1].n_changes == 2
-
-
-def test_partitioned_upsert_schema_evolution(spark, tmp_path):
-    """MERGE WITH SCHEMA EVOLUTION semantics on plain parquet: a batch may
-    add a column (old rows null-fill) and a later batch may omit it (new
-    rows null-fill); untouched partitions keep their old file schema, so
-    evolved targets read via mergeSchema. Without the flag, drift stays a
-    loud error."""
-    from gfe_db_spark.plans.merge import partitioned_upsert, read_bucketed
-
-    target = str(tmp_path / "t")
-    base = spark.createDataFrame([(1, "a"), (2, "b")], "k long, v string")
-    partitioned_upsert(base, target, ["k"], n_buckets=4)
-
-    widened = spark.createDataFrame([(2, "B", 9), (3, "c", 7)], "k long, v string, extra long")
-    # default: drift is an error, not a silent null column
-    import pytest as _pytest
-
-    with _pytest.raises(Exception, match="extra|UNION|union"):
-        partitioned_upsert(widened, target, ["k"], n_buckets=4)
-
-    partitioned_upsert(widened, target, ["k"], n_buckets=4, allow_schema_evolution=True)
-    got = {r.k: (r.v, r.extra) for r in read_bucketed(spark, target, merge_schema=True).collect()}
-    assert got == {1: ("a", None), 2: ("B", 9), 3: ("c", 7)}
-
-    # a narrower later batch (no `extra`) still merges; its new row null-fills
-    narrow = spark.createDataFrame([(4, "d")], "k long, v string")
-    partitioned_upsert(narrow, target, ["k"], n_buckets=4, allow_schema_evolution=True)
-    got = {r.k: (r.v, r.extra) for r in read_bucketed(spark, target, merge_schema=True).collect()}
-    assert got == {1: ("a", None), 2: ("B", 9), 3: ("c", 7), 4: ("d", None)}
 
 
 def test_load_invariants_gate():

@@ -1,11 +1,8 @@
-"""Reader-isolated manifest-pointer table (plans/txtable.py).
-
-The round-4 verdict's one open durability item: `partitioned_upsert` /
-`compact_small_files` swap windows are non-atomic for a concurrent reader.
-txtable closes it — these tests pin the isolation guarantee itself (a
+"""Reader-isolated manifest-pointer table (plans/txtable.py), the engine's
+one commit protocol. These tests pin the isolation guarantee itself (a
 reader polling during commits and compactions never observes a partial
-table), plus the O(batch) commit shape, crash recovery, optimistic
-conflict detection, and vacuum retention.
+table), plus the merge rules, the O(batch) commit shape, crash recovery,
+optimistic conflict detection, and vacuum retention.
 """
 
 from __future__ import annotations
@@ -17,6 +14,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from gfe_db_spark.plans import txtable as TX
+from gfe_db_spark.plans.merge import fs_exists
 
 
 def _mk(spark, n, val):
@@ -47,6 +45,43 @@ def test_tx_update_and_create_only_semantics(spark, tmp_path):
     )
     rows = {r.k: r.val for r in TX.tx_read(spark, root).collect()}
     assert rows[5] == 2 and rows[100] == 9 and len(rows) == 11
+
+
+def test_tx_merge_fn_applies_on_bootstrap(spark, tmp_path):
+    """A custom merge_fn combines duplicate batch keys on the FIRST commit
+    too (merged against an empty existing side), not only on later ones —
+    the bootstrap must not write the batch raw."""
+    root = str(tmp_path / "t")
+
+    def combine(existing, batch):
+        return (
+            existing.unionByName(batch)
+            .groupBy("k", "__bucket")
+            .agg(F.sum("val").alias("val"))
+        )
+
+    dup = spark.createDataFrame([(1, 10), (1, 5), (2, 1)], "k long, val long")
+    TX.tx_upsert(dup, root, ["k"], merge_fn=combine, n_buckets=4)
+    assert {r.k: r.val for r in TX.tx_read(spark, root).collect()} == {1: 15, 2: 1}
+    more = spark.createDataFrame([(1, 1)], "k long, val long")
+    TX.tx_upsert(more, root, ["k"], merge_fn=combine, n_buckets=4)
+    assert {r.k: r.val for r in TX.tx_read(spark, root).collect()} == {1: 16, 2: 1}
+
+
+def test_tx_rejects_bucket_count_change(spark, tmp_path):
+    """A commit with a different n_buckets would mis-bucket keys (missed
+    matches → duplicate-key appends); the manifest's recorded count makes
+    it a hard error, and the table stays committable at its own count."""
+    root = str(tmp_path / "t")
+    TX.tx_upsert(_mk(spark, 100, 1), root, ["k"], n_buckets=8)
+    gen = TX.current_manifest_number(spark, root)
+    with pytest.raises(ValueError, match="bucket-count mismatch"):
+        TX.tx_upsert(_mk(spark, 100, 2), root, ["k"], n_buckets=16)
+    assert TX.current_manifest_number(spark, root) == gen  # nothing published
+    TX.tx_upsert(_mk(spark, 100, 2), root, ["k"], n_buckets=8)
+    got = TX.tx_read(spark, root)
+    assert got.count() == 100
+    assert {r.val for r in got.collect()} == {2}
 
 
 def test_tx_commit_is_o_batch(spark, tmp_path):
@@ -172,18 +207,18 @@ def test_tx_recover_cleans_orphan_generation(spark, tmp_path):
     # numbered above current (2 > 1): indistinguishable from a live
     # writer's staging dir — survives recover even with zero grace
     assert TX.tx_recover(spark, root, grace_seconds=0) == []
-    assert TX.fs_exists(spark, orphan)
+    assert fs_exists(spark, orphan)
     # a later commit publishes generation 2: the orphan's number is now
     # taken, its (hypothetical) writer can only TxConflict — collectable.
     # The commit's own recover pass runs BEFORE the publish (current
     # still 1 at that point), so the orphan survives into the commit...
     TX.tx_upsert(_mk(spark, 20, 3), root, ["k"], n_buckets=4)
     assert {r.val for r in TX.tx_read(spark, root).collect()} == {3}
-    assert TX.fs_exists(spark, orphan)
+    assert fs_exists(spark, orphan)
     # ...and the NEXT recover (current now 2 ≥ orphan's 2) collects it
     removed = TX.tx_recover(spark, root, grace_seconds=0)
     assert removed == [orphan]
-    assert not TX.fs_exists(spark, orphan)
+    assert not fs_exists(spark, orphan)
     assert {r.val for r in TX.tx_read(spark, root).collect()} == {3}
 
 
@@ -201,13 +236,13 @@ def test_tx_recover_never_collects_slow_in_flight_writer(spark, tmp_path):
     # arbitrarily stale (grace 0 treats ANY age as past-grace)
     man, gen_dir, _ = TX._prepare_upsert(_mk(spark, 30, 1), root, ["k"], n_buckets=4)
     assert TX.tx_recover(spark, root, grace_seconds=0) == []
-    assert TX.fs_exists(spark, gen_dir), "GC collected a live writer's staging dir"
+    assert fs_exists(spark, gen_dir), "GC collected a live writer's staging dir"
     # vacuum must honor the same rule
     assert all(
         p != gen_dir
         for p in TX.tx_vacuum(spark, root, keep_manifests=1, grace_seconds=0)
     )
-    assert TX.fs_exists(spark, gen_dir)
+    assert fs_exists(spark, gen_dir)
     # the slow writer finishes: publish succeeds and the data it
     # references is intact
     TX._publish(spark, root, man, gen_dir)
@@ -225,17 +260,17 @@ def test_tx_two_concurrent_writers(spark, tmp_path):
     TX.tx_upsert(_mk(spark, 40, 0), root, ["k"], n_buckets=4)
     # writer A stages (data fully written, not yet published)
     man_a, dir_a, _ = TX._prepare_upsert(_mk(spark, 40, 1), root, ["k"], n_buckets=4)
-    assert TX.fs_exists(spark, dir_a)
+    assert fs_exists(spark, dir_a)
     # writer B runs a COMPLETE commit for the same generation number —
     # its commit-start recover must not collect A's in-flight staging dir
     TX.tx_upsert(_mk(spark, 40, 2), root, ["k"], n_buckets=4)
     assert TX.current_manifest_number(spark, root) == 2
-    assert TX.fs_exists(spark, dir_a), "winner's recover deleted loser's in-flight data"
+    assert fs_exists(spark, dir_a), "winner's recover deleted loser's in-flight data"
     # loser publishes: clean TxConflict, loser's dir self-collected,
     # winner's published snapshot untouched
     with pytest.raises(TX.TxConflict):
         TX._publish(spark, root, man_a, dir_a)
-    assert not TX.fs_exists(spark, dir_a)
+    assert not fs_exists(spark, dir_a)
     assert {r.val for r in TX.tx_read(spark, root).collect()} == {2}
     m = TX.read_manifest(spark, root)
     assert all(TX._parse_gen(g) in (1, 2) for g in m["buckets"].values())
