@@ -172,27 +172,6 @@ def cmd_snapshot(args) -> int:
     return 0
 
 
-def cmd_compact(args) -> int:
-    """Small-file compaction (the OPTIMIZE maintenance op) for any parquet
-    target the incremental writers touch — run on a schedule or after a
-    burst of commits."""
-    from gfe_db_spark.plans.compaction import compact_small_files
-
-    spark = _spark("gfe-compact")
-    stats = compact_small_files(
-        spark,
-        args.path,
-        target_bytes=args.target_mb * 1024 * 1024,
-        partition_by=args.partition_by,
-    )
-    print(
-        f"files {stats.files_before} -> {stats.files_after} "
-        f"({stats.bytes_total} bytes, {stats.rows} rows"
-        f"{', skipped' if stats.skipped else ''})"
-    )
-    return 0
-
-
 def cmd_list(args) -> int:
     from gfe_db_spark.queries import all_queries
 
@@ -259,18 +238,6 @@ def main(argv: list[str] | None = None) -> int:
     sn.add_argument("--version", help="snapshot version, e.g. v0002 (default latest)")
     sn.add_argument("--against", help="older version for diff (default second-latest)")
     sn.set_defaults(fn=cmd_snapshot)
-
-    cp = sub.add_parser("compact", help="rewrite a parquet target into ~target-size files")
-    cp.add_argument("path", help="parquet directory to compact")
-    cp.add_argument("--target-mb", type=int, default=128, help="target file size (MB)")
-    cp.add_argument(
-        "--partition-by",
-        nargs="+",
-        default=None,
-        metavar="COL",
-        help="hive partition columns to preserve (repartition per directory)",
-    )
-    cp.set_defaults(fn=cmd_compact)
 
     args = p.parse_args(argv)
     return args.fn(args)

@@ -2,9 +2,10 @@
 DataFrames with MERGE (dedup-upsert) semantics.
 
 The ten `apoc.periodic.iterate` statements in `load.cyp:1-138` become ten
-DataFrame pipelines. Cross-release accumulation (`ON MATCH SET`) is a
-full-outer merge per table; the releases array union is the exact builtin
-composition `array_sort ∘ array_distinct ∘ array_union` (`load.cyp:95`).
+DataFrame pipelines. Cross-release accumulation (`ON MATCH SET`) is
+`upsert_graph`'s per-table bucketed MERGE into manifest-pointer tables;
+the releases array union is the exact builtin composition
+`array_sort ∘ array_distinct ∘ array_union` (`load.cyp:95`).
 
 Key corrections over the reference (SURVEY §7 "inconsistencies"):
   - GFE keyed consistently on `name` (`create_constraints.cyp:1` says
@@ -54,11 +55,6 @@ class GraphTables:
     def items(self):
         return [(f.name, getattr(self, f.name)) for f in fields(self)]
 
-    def save(self, path: str) -> None:
-        """S12: versioned snapshot — one parquet dataset per table."""
-        for name, df in self.items():
-            df.write.mode("overwrite").parquet(os.path.join(path, name))
-
     @staticmethod
     def load(spark: SparkSession, path: str) -> "GraphTables":
         """Load the accumulated graph. A `_graph_manifests` child marks a
@@ -68,30 +64,19 @@ class GraphTables:
         reader polling during a release load sees the whole graph before
         the load or the whole graph after it, the isolation the reference
         gets from Neo4j transactions, ref load.cyp:9). Without it, each
-        table resolves through its own manifest if it has one (a load that
-        crashed before its first graph-manifest publish), else is read as
-        plain parquet (a snapshot dir written by `save`)."""
-        from gfe_db_spark.plans.merge import fs_exists
+        table resolves through its own latest manifest (a load that
+        crashed before its first graph-manifest publish). A path with
+        neither kind of manifest raises FileNotFoundError (`tx_read`)."""
         from gfe_db_spark.plans.txtable import latest_numbered_json, tx_read
 
         _n, gdoc = latest_numbered_json(spark, _graph_manifest_dir(path))
-        if gdoc is not None:
-            return GraphTables(**{
-                f.name: tx_read(
-                    spark,
-                    os.path.join(path, f.name),
-                    generation=gdoc["tables"][f.name],
-                )
-                for f in fields(GraphTables)
-            })
-
-        def load_one(name: str) -> DataFrame:
-            tpath = os.path.join(path, name)
-            if fs_exists(spark, os.path.join(tpath, "_manifests")):
-                return tx_read(spark, tpath)
-            return spark.read.parquet(tpath)
-
-        return GraphTables(**{f.name: load_one(f.name) for f in fields(GraphTables)})
+        pins = gdoc["tables"] if gdoc is not None else {}
+        return GraphTables(**{
+            f.name: tx_read(
+                spark, os.path.join(path, f.name), generation=pins.get(f.name)
+            )
+            for f in fields(GraphTables)
+        })
 
 
 def _dedup_first(df: DataFrame, keys: list[str], order: list) -> DataFrame:
@@ -109,10 +94,9 @@ def load_release(
     tables: BuildTables,
     release: str,
     submit_date: str = "2024-01-01",
-    existing: GraphTables | None = None,
 ) -> GraphTables:
-    """Run the ten MERGE pipelines for one release; `existing` carries the
-    accumulated graph for multi-release upsert (idempotent on replay, ST3)."""
+    """Run the ten MERGE pipelines for one release. Accumulation across
+    releases (idempotent on replay, ST3) is `upsert_graph`'s commit."""
     gfe_seq = tables.gfe_sequences
 
     # A1: MERGE (gfe:GFE {name}) ON CREATE SET locus   (load.cyp:2-9)
@@ -208,7 +192,7 @@ def load_release(
         F.col("accession").alias("dst_accession"),
     ).dropDuplicates()
 
-    new = GraphTables(
+    return GraphTables(
         nodes_gfe=nodes_gfe,
         nodes_sequence=nodes_sequence,
         nodes_feature=nodes_feature,
@@ -221,9 +205,6 @@ def load_release(
         edges_has_sequence=edges_has_sequence,
         edges_has_feature=edges_has_feature,
     )
-    if existing is None:
-        return new
-    return merge_graphs(existing, new)
 
 
 # ON MATCH rule per table, mirroring load.cyp: (merge keys, rule).
@@ -287,8 +268,9 @@ def upsert_graph(
     each table is a manifest-pointer table (`plans/txtable.tx_upsert`),
     hash-bucketed on its merge key, and only the buckets this release
     touches are read and rewritten — commit cost is O(release), not
-    O(accumulated graph). Semantics per table = merge_graphs (same
-    MERGE_RULES, disk-backed). Returns touched buckets per table.
+    O(accumulated graph). Each table's ON MATCH rule is its MERGE_RULES
+    entry, applied by `plans/merge.merge_clustered`. Returns touched
+    buckets per table.
 
     A table commit lands in a fresh generation dir published by an atomic
     manifest rename. On top, ONE graph-level manifest
@@ -426,15 +408,3 @@ def vacuum_graph(
             )
         )
     return removed
-
-
-def merge_graphs(old: GraphTables, new: GraphTables) -> GraphTables:
-    """Cross-release MERGE in memory: ON CREATE = keep old row, insert new
-    keys; ON MATCH per table as MERGE_RULES says (create-only vs update vs
-    releases-array union, mirroring load.cyp)."""
-    from gfe_db_spark.plans.merge import apply_merge_rule
-
-    return GraphTables(**{
-        name: apply_merge_rule(old_df, getattr(new, name), *_merge_args(name))
-        for name, old_df in old.items()
-    })

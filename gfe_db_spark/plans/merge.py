@@ -10,9 +10,9 @@ the WHOLE target per commit — O(table) per batch, a scale-killer at
   (``__bucket = pmod(xxhash64(keys), n_buckets)`` — deterministic,
   engine-portable), so a batch touches a bounded set of buckets and only
   those are read and rewritten;
-- `apply_merge_rule` / `merge_clustered`: the ON MATCH semantics
-  (create_only / update / custom merge_fn), unclustered for in-memory
-  merges and clustered-by-``__bucket`` for disk commits;
+- `merge_clustered`: the ON MATCH semantics (create_only / update /
+  custom merge_fn) of every MERGE in the engine, clustered by
+  ``__bucket`` for the commit's partitioned write;
 - the ``fs_*`` helpers: Hadoop FileSystem access for any scheme.
 
 The commit protocol itself lives in `plans/txtable.py`: each commit lands
@@ -39,26 +39,6 @@ def bucket_expr(keys: list[str], n_buckets: int = DEFAULT_BUCKETS) -> Column:
     return F.pmod(F.xxhash64(*[F.col(k) for k in keys]), F.lit(n_buckets)).cast("int")
 
 
-def apply_merge_rule(
-    existing: DataFrame,
-    batch: DataFrame,
-    keys: list[str],
-    on_match: str,
-    merge_fn: Callable[[DataFrame, DataFrame], DataFrame] | None,
-) -> DataFrame:
-    """The ON MATCH semantics of every MERGE in the engine: batch-wins
-    update, create_only, or a custom combine. This is the unclustered form
-    the in-memory graph merge (`plans/load.merge_graphs`) uses;
-    `merge_clustered` is its single-exchange twin for disk commits."""
-    if merge_fn is not None:
-        return merge_fn(existing, batch)
-    if on_match == "update":
-        return batch.unionByName(existing.join(batch, on=keys, how="left_anti"))
-    if on_match == "create_only":
-        return existing.unionByName(batch.join(existing, on=keys, how="left_anti"))
-    raise ValueError(f"unknown on_match: {on_match}")
-
-
 def merge_clustered(
     existing: DataFrame,
     batch: DataFrame,
@@ -66,7 +46,8 @@ def merge_clustered(
     on_match: str,
     merge_fn: Callable[[DataFrame, DataFrame], DataFrame] | None,
 ) -> DataFrame:
-    """`apply_merge_rule` ∘ cluster-by-__bucket in ONE exchange (r14,
+    """The ON MATCH rule (batch-wins ``update``, ``create_only``, or a
+    custom `merge_fn` combine) ∘ cluster-by-__bucket in ONE exchange (r14,
     guide §2.4/§8): the rule-based MERGE plans as a priority argmax over
     `union(batch, existing)` keyed on (__bucket, keys) — ``update`` gives
     the batch row priority, ``create_only`` the existing row — after a
@@ -79,9 +60,11 @@ def merge_clustered(
     __bucket: callers write it with ``partitionBy("__bucket")`` directly,
     no further repartition.
 
-    Semantics are those of dropDuplicates(keys) + `apply_merge_rule`,
-    row-for-row, given the writers' standing invariant that `existing`
-    holds at most one row per key (every commit path dedups):
+    Semantics are those of dropDuplicates(keys) + an anti-join MERGE
+    (``update``: batch ∪ existing-not-in-batch; ``create_only``: existing
+    ∪ batch-not-in-existing), row-for-row, given the writers' standing
+    invariant that `existing` holds at most one row per key (every commit
+    path dedups):
     - matched key → batch row ('update') / existing row ('create_only');
     - unmatched → the single present row;
     - duplicate batch keys → one arbitrary row (dropDuplicates' pick is

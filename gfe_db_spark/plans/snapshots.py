@@ -3,9 +3,11 @@
 The reference's backup story is S3 prefix-per-release copies
 (ref ``run.sh:161-172``, restore = repoint `load_db.sh` at a prefix).
 Spark-native form: each snapshot is a directory ``<root>/v<NNNN>`` holding
-the GraphTables parquet layout, plus a diff operator that compares two
-snapshots table-by-table — the release-audit tool (`what changed in
-3560?`) the reference answers by re-running Cypher counts.
+a manifest graph committed by `upsert_graph` — the same store format as
+the live graph, as the reference's backups are dumps of its one store —
+plus a diff operator that compares two snapshots table-by-table — the
+release-audit tool (`what changed in 3560?`) the reference answers by
+re-running Cypher counts.
 """
 
 from __future__ import annotations
@@ -16,7 +18,7 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from gfe_db_spark.plans.load import MERGE_RULES, GraphTables
+from gfe_db_spark.plans.load import MERGE_RULES, GraphTables, upsert_graph
 
 _VERSION_RE = re.compile(r"^v(\d{4})$")
 
@@ -34,14 +36,15 @@ def list_snapshots(spark: SparkSession, root: str) -> list[str]:
 
 
 def save_snapshot(graph: GraphTables, root: str) -> str:
-    """Write the next version directory (v0001, v0002, …); returns its
-    name. Append-only: existing snapshots are never touched, so restore is
+    """Commit `graph` into the next, empty version directory (v0001,
+    v0002, …) through `upsert_graph`; returns its name. Append-only:
+    existing snapshots are never touched, so restore is
     `load_snapshot(root, version)` and rollback is a repoint."""
     spark = graph.nodes_gfe.sparkSession
     existing = list_snapshots(spark, root)
     nxt = 1 + (int(_VERSION_RE.match(existing[-1]).group(1)) if existing else 0)
     name = f"v{nxt:04d}"
-    graph.save(os.path.join(root, name))
+    upsert_graph(graph, os.path.join(root, name))
     return name
 
 

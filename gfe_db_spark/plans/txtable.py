@@ -467,10 +467,9 @@ def tx_compact(
 ) -> int:
     """Fold every bucket into one fresh generation (the OPTIMIZE /
     small-file compaction for manifest tables) and atomically repoint the
-    manifest. Unlike `plans/compaction.compact_small_files`, there is NO
-    window where the table is missing or mixed: readers resolve through
-    the manifest, and the old generations stay on disk untouched until
-    `tx_vacuum`. Returns the new generation number."""
+    manifest. There is no window where the table is missing or mixed:
+    readers resolve through the manifest, and the old generations stay on
+    disk untouched until `tx_vacuum`. Returns the new generation number."""
     tx_recover(spark, root, grace_seconds=grace_seconds)
     m = read_manifest(spark, root)
     if m is None:

@@ -81,7 +81,7 @@ PLAN_CHANGED: tuple[str, ...] = (
 DRIVER_WINDOW = 50
 
 PRIORITY: tuple[str, ...] = (
-    # ---- Round-14 window, positions 1-50 (policy-pinned by
+    # ---- Round-15 window, positions 1-50 (policy-pinned by
     # tests/test_window_policy.py): PLAN_CHANGED first (the 23 r13
     # rewrites the driver has not re-checked), then
     # stalest-driver-check-first computed from the committed
@@ -111,6 +111,33 @@ PRIORITY: tuple[str, ...] = (
     "dedup_minhash_est",
     "dedup_minhash_signatures",
     "multimodal_features",
+    "a1_dedup_distinct",
+    "a8_explode_distinct_count",
+    "a_count_distinct",
+    "a_cube",
+    "a_grouping_sets",
+    "a_having_filter",
+    "a_rollup",
+    "c10_date_kit",
+    "c12_json_extraction",
+    "c5_version_format",
+    "copurchase_pairs",
+    "division_all_regions",
+    "domain_cap_sample",
+    "f1_processability_filter",
+    "f2_skip_list_filter",
+    "f5_regex_predicate",
+    "f6_conditional_pivot",
+    "fixed_k_per_group_sample",
+    "imgt_stream_scan",
+    "j1_broadcast_lookup",
+    "j2_dimension_chain",
+    "j4_composite_key_join",
+    "j6_cross_join_singleton",
+    "nation_revenue_share",
+    "order_backlog_daily",
+    "pack_sequences",
+    "pctl_quantity_by_flag",
     "bpe_train_merges",
     "bpe_vocab_stats",
     "chisq_independence",
@@ -230,55 +257,28 @@ PRIORITY: tuple[str, ...] = (
     "shard_by_token_budget",
     "stream_static_enrich",
     "stream_stream_join",
-    "imgt_stream_scan",
-    "domain_cap_sample",
     "stratified_sample",
-    "fixed_k_per_group_sample",
-    "pack_sequences",
     "stream_dedup",
     "rolling_distinct_users_7d",
     "timeseries_gapfill_locf",
-    "order_backlog_daily",
-    "nation_revenue_share",
     "reorder_interval_stats",
     "revenue_pareto_deciles",
-    "division_all_regions",
-    "copurchase_pairs",
     "unpivot_measures",
     "scd2_customer_history",
     "quality_decile_stats",
-    "a_grouping_sets",
     "text_lm_score",
     "skew_salted_join",
     "skew_stats_hot_keys",
-    "a8_explode_distinct_count",
     "q1_pricing_summary",
     "q3_shipping_priority",
     "q6_forecast_revenue",
     "w2_topk_per_group",
-    "a1_dedup_distinct",
-    "j1_broadcast_lookup",
-    "f1_processability_filter",
     "so1_except",
     "w_lead_lag_delta",
     "q22_global_sales_opportunity",
     "q19_disjunctive_predicates",
     "q18_large_volume_customer",
     "w_running_total",
-    "pctl_quantity_by_flag",
-    "a_count_distinct",
-    "a_cube",
-    "a_having_filter",
-    "a_rollup",
-    "c5_version_format",
-    "c10_date_kit",
-    "c12_json_extraction",
-    "f2_skip_list_filter",
-    "f5_regex_predicate",
-    "f6_conditional_pivot",
-    "j2_dimension_chain",
-    "j4_composite_key_join",
-    "j6_cross_join_singleton",
 )
 
 

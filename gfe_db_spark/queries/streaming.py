@@ -782,16 +782,15 @@ def stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Executed streaming CDC apply: the events changelog arrives as TWO
     files split by event_id parity — deliberately NOT event-time-ordered,
     so the per-batch foreachBatch merge must be version-aware. Each batch
-    reduces to latest-change-per-key (max_by over the version struct,
-    tombstones kept IN state so an out-of-order older update can't
-    resurrect a deleted key), merges with the persisted state by the same
-    arg-max, and commits via write-new + atomic swap. The final snapshot
-    (tombstoned keys dropped) is fully SQL-checkable against the batch
-    changelog apply — same oracle as `cdc_apply_changelog`.
+    MERGEs into the persisted state keeping the latest change per key
+    (max_by over the version struct, tombstones kept IN state so an
+    out-of-order older update can't resurrect a deleted key). The final
+    snapshot (tombstoned keys dropped) is fully SQL-checkable against the
+    batch changelog apply — same oracle as `cdc_apply_changelog`.
 
-    Scale: per-batch cost is O(batch + |state|) here; with the bucketed
-    `tx_upsert` target (plans/txtable.py) the state rewrite prunes
-    to touched buckets — the production swap, unchanged semantics."""
+    Scale: the state is a bucketed `tx_upsert` table (plans/txtable.py),
+    so a batch's commit reads and rewrites only the buckets its keys hash
+    to — O(batch + touched buckets), not O(|state|)."""
     import os
     import shutil
     import tempfile

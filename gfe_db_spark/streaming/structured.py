@@ -1,7 +1,8 @@
 """Structured Streaming operators (beyond the reference's batch-incremental
 model): file-source streams, watermarked windowed aggregation, session
-windows, and an idempotent foreachBatch upsert sink (a manifest-pointer
-table, `plans/txtable.py`, so readers of the sink see whole micro-batches).
+windows, and two foreachBatch sinks — an idempotent upsert and a CDC
+merge — that commit into manifest-pointer tables (`plans/txtable.py`), so
+readers of a sink see whole micro-batches.
 
 These are the streaming forms of the batch queries in
 `queries/streaming.py`; local tests drive them with the parquet file
@@ -160,57 +161,48 @@ def foreach_batch_upsert(
 
 
 def cdc_merge_sink(state_path: str):
-    """foreachBatch CDC merge with tombstone retention: each batch reduces
-    to latest-change-per-key (arg-max over the (ts, seq) version struct),
-    merges with the persisted state by the same arg-max, and commits via
-    write-new + atomic swap. Tombstones (op='D') stay IN state so an
-    out-of-order older update in a later batch cannot resurrect a deleted
-    key; readers drop them via `cdc_current_snapshot`.
-
-    At scale the state swap becomes `plans/txtable.tx_upsert` (only
-    touched buckets rewritten); semantics unchanged. Input batches
-    need columns (key, version_ts, version_seq, op, value)."""
-    import os
-    import shutil
+    """foreachBatch CDC merge with tombstone retention: each batch MERGEs
+    into the state, a manifest-pointer table keyed on ``key``
+    (plans/txtable.tx_upsert), keeping per key the arg-max change over
+    the (ts, seq) version struct and summing `n_changes`. Only the
+    buckets a batch touches are rewritten, the commit is atomic, and the
+    state path may be any Hadoop URI (file://, hdfs://, s3a://).
+    Tombstones (op='D') stay IN state so an out-of-order older update in
+    a later batch cannot resurrect a deleted key; readers drop them via
+    `cdc_current_snapshot`. Input batches need columns (key, version_ts,
+    version_seq, op, value)."""
+    from gfe_db_spark.plans.txtable import tx_upsert
 
     vkey = F.struct("version_ts", "version_seq")
     payload = F.struct("version_ts", "version_seq", "op", "value")
 
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        s = batch_df.sparkSession
-        delta = (
-            batch_df.groupBy("key")
+    def latest_change(existing: DataFrame, batch: DataFrame) -> DataFrame:
+        # __bucket is a function of key, so grouping by it too is exact
+        return (
+            existing.unionByName(batch)
+            .groupBy("__bucket", "key")
             .agg(
                 F.max_by(payload, vkey).alias("s"),
-                F.count(F.lit(1)).alias("n_changes"),
+                F.sum("n_changes").alias("n_changes"),
             )
-            .select("key", "s.*", "n_changes")
+            .select("key", "s.*", "n_changes", "__bucket")
         )
-        if os.path.isdir(state_path):
-            merged = (
-                s.read.parquet(state_path)
-                .unionByName(delta)
-                .groupBy("key")
-                .agg(
-                    F.max_by(payload, vkey).alias("s"),
-                    F.sum("n_changes").alias("n_changes"),
-                )
-                .select("key", "s.*", "n_changes")
-            )
-        else:
-            merged = delta
-        staged = f"{state_path}.v{batch_id}"
-        merged.write.mode("overwrite").parquet(staged)
-        if os.path.isdir(state_path):
-            shutil.rmtree(state_path)
-        os.replace(staged, state_path)
+
+    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
+        changes = batch_df.select(
+            "key", "version_ts", "version_seq", "op", "value",
+            F.lit(1).cast("long").alias("n_changes"),
+        )
+        tx_upsert(changes, state_path, ["key"], merge_fn=latest_change)
 
     return apply_batch
 
 
 def cdc_current_snapshot(spark: SparkSession, state_path: str) -> DataFrame:
     """Read the CDC state and drop tombstoned keys — the current table."""
-    return spark.read.parquet(state_path).filter(F.col("op") != "D")
+    from gfe_db_spark.plans.txtable import read_table
+
+    return read_table(spark, state_path).filter(F.col("op") != "D")
 
 
 def stream_static_enrich(

@@ -138,16 +138,6 @@ def test_cli_load_from_manifest(spark, tmp_path):
     assert os.path.exists(str(tmp_path / "graph" / "nodes_gfe"))
 
 
-def test_cli_compact(spark, tmp_path, capsys):
-    path = str(tmp_path / "frag")
-    spark.range(1000).repartition(20).write.parquet(path)
-    rc = main(["compact", path, "--target-mb", "64"])
-    assert rc == 0
-    out = capsys.readouterr().out
-    assert "files 20 ->" in out
-    assert spark.read.parquet(path).count() == 1000
-
-
 def test_cli_build_use_existing_skips(spark, tmp_path, capsys):
     """--use-existing reuses complete prior artifacts (exit 0, no rebuild)
     but rebuilds when the output is missing or incomplete."""

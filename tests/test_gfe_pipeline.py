@@ -8,7 +8,7 @@ import pytest
 from gfe_db_spark.functions.scalars import seq_hash_py
 from gfe_db_spark.plans.accession import AccessionRegistry
 from gfe_db_spark.plans.build import build_release
-from gfe_db_spark.plans.load import GraphTables, load_release, merge_graphs
+from gfe_db_spark.plans.load import GraphTables, load_release, upsert_graph
 from gfe_db_spark.plans.queries import (
     features_of_allele,
     has_ipd_allele_release_counts,
@@ -204,7 +204,10 @@ def test_graph_load_and_merge(spark, tmp_path_factory):
         registry,
         ard_mapping=fx.ard_mapping(spark),
     )
-    g = load_release(spark, b60, "3560", submit_date="2024-06-01", existing=g50)
+    graph_path = str(tmp / "g")
+    upsert_graph(g50, graph_path)
+    upsert_graph(load_release(spark, b60, "3560", submit_date="2024-06-01"), graph_path)
+    g = GraphTables.load(spark, graph_path)
 
     # releases-array union (A6/J9): A1's GFE seen in both releases
     edges = {
@@ -223,7 +226,7 @@ def test_graph_load_and_merge(spark, tmp_path_factory):
 
     # snapshot round-trip (S12)
     snap = str(tmp / "snapshot")
-    g.save(snap)
+    upsert_graph(g, snap)
     g2 = GraphTables.load(spark, snap)
     assert g2.nodes_gfe.count() == g.nodes_gfe.count()
 
@@ -246,7 +249,10 @@ def test_merge_idempotent_replay(spark, tmp_path_factory):
         spark, read_imgt_dat(spark, fx.write_release_dat(str(tmp), "3550")), "3550", registry
     )
     g1 = load_release(spark, b, "3550")
-    g2 = merge_graphs(g1, load_release(spark, b, "3550"))
+    graph_path = str(tmp / "g")
+    upsert_graph(g1, graph_path)
+    upsert_graph(load_release(spark, b, "3550"), graph_path)
+    g2 = GraphTables.load(spark, graph_path)
     for (name, df1), (_, df2) in zip(g1.items(), g2.items()):
         assert df1.count() == df2.count(), name
     edges = {tuple(r[:2]): r["releases"] for r in g2.edges_has_ipd_allele.collect()}
@@ -298,7 +304,7 @@ def test_snapshot_versioning_and_diff(spark, tmp_path):
     restore-by-version works, and the diff reports the release delta."""
     from gfe_db_spark.plans.accession import AccessionRegistry
     from gfe_db_spark.plans.build import build_release
-    from gfe_db_spark.plans.load import load_release, merge_graphs
+    from gfe_db_spark.plans.load import GraphTables, load_release, upsert_graph
     from gfe_db_spark.plans.snapshots import (
         list_snapshots,
         load_snapshot,
@@ -319,8 +325,9 @@ def test_snapshot_versioning_and_diff(spark, tmp_path):
         "3550",
     )
     assert save_snapshot(g1, root) == "v0001"
-    g2 = merge_graphs(
-        g1,
+    graph_path = str(tmp_path / "g")
+    upsert_graph(g1, graph_path)
+    upsert_graph(
         load_release(
             spark,
             build_release(
@@ -331,9 +338,15 @@ def test_snapshot_versioning_and_diff(spark, tmp_path):
             ),
             "3560",
         ),
+        graph_path,
     )
+    g2 = GraphTables.load(spark, graph_path)
     assert save_snapshot(g2, root) == "v0002"
     assert list_snapshots(spark, root) == ["v0001", "v0002"]
+    # a snapshot is a manifest graph, the live graph's own format
+    for v in ("v0001", "v0002"):
+        assert (tmp_path / "snaps" / v / "_graph_manifests").is_dir()
+        assert (tmp_path / "snaps" / v / "nodes_gfe" / "_manifests").is_dir()
 
     diff = {r.table: r for r in snapshot_diff(
         load_snapshot(spark, root, "v0001"), load_snapshot(spark, root)
@@ -729,9 +742,13 @@ def test_graph_layout_switch_is_refused(spark, tmp_path_factory):
     g = load_release(spark, built, "3550")
 
     plain_path = str(tmp / "g_plain")
-    g.save(plain_path)  # plain parquet tables, no manifests
+    for name, df in g.items():  # plain parquet tables, no manifests
+        df.write.parquet(f"{plain_path}/{name}")
     with _pytest.raises(ValueError, match="holds non-manifest data"):
         upsert_graph(g, plain_path)
+    # ... and reading it is refused, not misread as a graph
+    with _pytest.raises(FileNotFoundError, match="no committed manifest under .*g_plain"):
+        GraphTables.load(spark, plain_path)
 
     tx_path = str(tmp / "g_tx")
     with _pytest.raises(ValueError, match="only 'tx'"):

@@ -544,6 +544,7 @@ def test_cdc_merge_sink_out_of_order_tombstone(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
+    from gfe_db_spark.plans.txtable import read_table
     from gfe_db_spark.streaming.structured import cdc_current_snapshot, cdc_merge_sink
 
     state = str(tmp_path / "state")
@@ -560,8 +561,37 @@ def test_cdc_merge_sink_out_of_order_tombstone(spark, tmp_path):
     assert 1 not in snap, "tombstone resurrected by an older update"
     assert snap[2].value == 20.0 and snap[2].n_changes == 2
     # raw state still holds the tombstone with full change history
-    raw = {r.key: r for r in spark.read.parquet(state).collect()}
+    raw = {r.key: r for r in read_table(spark, state).collect()}
     assert raw[1].op == "D" and raw[1].n_changes == 2
+
+
+def test_cdc_merge_sink_commits_to_uri_state_path(spark, tmp_path):
+    """The CDC state may live at any Hadoop URI, not just a local path:
+    with a file:// state path, two out-of-order batches commit, the
+    tombstone and the summed n_changes survive, and the state is a
+    manifest-pointer table readers resolve through read_table."""
+    import datetime as dt
+
+    from gfe_db_spark.plans.txtable import read_table
+    from gfe_db_spark.streaming.structured import cdc_current_snapshot, cdc_merge_sink
+
+    state = f"file://{tmp_path}/state"
+    sink = cdc_merge_sink(state)
+    t = lambda s: dt.datetime(2024, 1, 1, 0, 0, s)
+    cols = ["key", "version_ts", "version_seq", "op", "value"]
+    sink(spark.createDataFrame(
+        [(1, t(10), 100, "D", 0.0), (2, t(10), 101, "U", 20.0), (3, t(1), 1, "U", 3.0)],
+        cols), 0)
+    sink(spark.createDataFrame(
+        [(1, t(5), 50, "U", 99.0), (2, t(5), 51, "U", 5.0), (2, t(6), 52, "U", 6.0)],
+        cols), 1)
+    assert os.path.isdir(tmp_path / "state" / "_manifests")
+    raw = {r.key: r for r in read_table(spark, state).collect()}
+    assert raw[1].op == "D" and raw[1].n_changes == 2
+    assert raw[2].value == 20.0 and raw[2].n_changes == 3
+    assert raw[3].value == 3.0 and raw[3].n_changes == 1
+    snap = {r.key: r.value for r in cdc_current_snapshot(spark, state).collect()}
+    assert snap == {2: 20.0, 3: 3.0}
 
 
 def test_load_invariants_gate():

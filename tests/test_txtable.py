@@ -156,8 +156,7 @@ def test_tx_reader_never_sees_partial_state(spark, tmp_path):
 
 def test_tx_reader_isolated_during_compaction(spark, tmp_path):
     """Compaction repoints the manifest; a polling reader never sees a
-    missing or doubled table (compact_small_files' delete→rename window
-    does not exist here)."""
+    missing or doubled table."""
     root = str(tmp_path / "t")
     n = 120
     for v in range(3):  # several generations to fold
