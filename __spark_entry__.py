@@ -3,7 +3,7 @@
 The driver's verify runs ``entry(spark)`` as a smoke check, runs each
 ``queries()[name]`` at sf=0.01 and compares it against the matching
 ``oracle_sql()[name]`` via DuckDB (row-count + schema + order-insensitive
-value-hash → CORRECTNESS_r{N}.json).
+value-hash).
 
 All real logic lives in ``gfe_db_spark``; this module is the thin contract
 surface.
@@ -26,26 +26,25 @@ SMOKE_SF_DIR = "/root/testdata/sf0.001"
 
 
 def entry(spark: SparkSession) -> DataFrame:
-    """Flagship query on /root/testdata/sf0.001; driver checks rows>0.
+    """Flagship query; the driver checks rows>0.
 
-    TPC-H Q5 shape: the 6-way join through region→nation with broadcast
-    dims — the widest plan in the inventory.
+    The GFE pipeline end to end on the deterministic mini-release: EMBL
+    parse → build → accession registry → graph load → motif query.
     """
-    from gfe_db_spark.queries.relational import q5_local_supplier_volume
+    from gfe_db_spark.queries.graph import gfe_end_to_end
 
-    return q5_local_supplier_volume(spark, SMOKE_SF_DIR)
+    return gfe_end_to_end(spark, SMOKE_SF_DIR)
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """One entry per implemented operator from SURVEY.md §2."""
-    from gfe_db_spark.queries import all_queries
+    """The GFE engine's registry entries (graph, Cypher, naming, txtable)."""
+    from gfe_db_spark.queries import gfe_queries
 
-    return {name: spec.fn for name, spec in all_queries().items()}
+    return {name: spec.fn for name, spec in gfe_queries().items()}
 
 
 def oracle_sql() -> dict[str, str]:
-    """DuckDB-equivalent SQL per query; omitted for non-SQL-expressible ops
-    (driver records a weaker rows-only check for those)."""
-    from gfe_db_spark.queries import all_queries
+    """DuckDB-equivalent SQL per query; every GFE entry has one."""
+    from gfe_db_spark.queries import gfe_queries
 
-    return {name: spec.sql for name, spec in all_queries().items() if spec.sql is not None}
+    return {name: spec.sql for name, spec in gfe_queries().items()}

@@ -5,7 +5,7 @@ query runner over the registered inventory.
     python -m gfe_db_spark build -i hla.3560.dat -r 3560 -o out/ [--limit N]
     python -m gfe_db_spark load --manifest file:///.../manifest.json \
         --staging st/ --state state.json --registry reg/ --graph graph/
-    python -m gfe_db_spark query q1_pricing_summary --sf-dir /root/testdata/sf0.01
+    python -m gfe_db_spark query gfe_naming
     python -m gfe_db_spark list
 
 Exit codes mirror the reference's build contract (ref ``app.py:473,684-688``):
@@ -185,10 +185,16 @@ def main(argv: list[str] | None = None) -> int:
     p = argparse.ArgumentParser(prog="gfe_db_spark")
     sub = p.add_subparsers(dest="cmd", required=True)
 
-    b = sub.add_parser("build", help="parse one release .dat and write the build tables")
+    b = sub.add_parser(
+        "build",
+        help="parse one release .dat and export the build tables as plain parquet "
+        "(an export, not the graph store; `load` commits releases to the store)",
+    )
     b.add_argument("-i", "--input", required=True, help="hla.<release>.dat path")
     b.add_argument("-r", "--release", required=True, help="release number, e.g. 3560")
-    b.add_argument("-o", "--output", required=True, help="output directory")
+    b.add_argument(
+        "-o", "--output", required=True, help="export directory (plain parquet, one dir per table)"
+    )
     b.add_argument("--registry", help="accession registry path (default <output>/registry)")
     b.add_argument("--limit", type=int, default=None, help="build at most N alleles (W1)")
     b.add_argument(

@@ -8,7 +8,7 @@ filter → explode → join → window. No driver-side iteration anywhere.
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -51,6 +51,15 @@ class BuildTables:
     all_cds: DataFrame
     all_alignments: DataFrame | None
     errors: DataFrame
+    #: the intermediate frames `build_release` cached; every table above
+    #: reads them, so release them only once the tables are consumed
+    cached: list[DataFrame] = field(default_factory=list)
+
+    def unpersist(self) -> None:
+        """Drop this build's cached frames from the block manager and the
+        cache manager."""
+        for df in self.cached:
+            df.unpersist()
 
 
 def feature_order_key() -> F.Column:
@@ -286,4 +295,5 @@ def build_release(
         all_cds=all_cds,
         all_alignments=all_alignments,
         errors=errors,
+        cached=[ok, feats, gfe_named],
     )

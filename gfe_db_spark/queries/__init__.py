@@ -1,8 +1,10 @@
 """Query registry: every operator from SURVEY.md §2 exposed as a named
 (spark_fn, oracle_sql) pair.
 
-Each module contributes a ``QUERIES: dict[str, QuerySpec]``. The driver
-contract (`__spark_entry__.py`) flattens these into ``queries()`` /
+Each module contributes a ``QUERIES: dict[str, QuerySpec]``;
+``all_queries()`` merges them into the full registry that the CLI and the
+local oracle sweep run. The driver contract (`__spark_entry__.py`) exposes
+only the GFE engine's entries, ``GFE_ENTRIES``, as ``queries()`` /
 ``oracle_sql()``. Oracle SQL is ANSI SQL runnable by DuckDB over the same
 parquet tables; queries whose semantics aren't SQL-expressible set
 ``sql=None`` and get the weaker rows-only check.
@@ -25,7 +27,26 @@ class QuerySpec:
     doc: str = ""
 
 
-# Explicit registry ordering. The driver's correctness gate walks the
+#: The GFE engine's entries: release build and naming, the Cypher front end
+#: and the reference's three validation queries, the alignment join, and the
+#: manifest-table commit (txtable). Every one is hash-checked against its
+#: oracle. This is the system the driver contract exposes.
+GFE_ENTRIES: tuple[str, ...] = (
+    "gfe_end_to_end",
+    "gfe_naming",
+    "cypher_front_end",
+    "cypher_validation_node_counts",
+    "cypher_validation_release_histogram",
+    "cypher_validation_accession_counts",
+    "alignment_join",
+    "txtable_upsert",
+    "txtable_time_travel_diff",
+)
+
+
+# Explicit ordering of the full registry. It dates from when the driver
+# contract was the whole registry; the contract is now GFE_ENTRIES, which
+# the driver checks in full. The driver's correctness gate walks the
 # registry in insertion order and (observed in round 1) checks a bounded
 # prefix, so the prefix must cover every operator family. Entries NOT
 # listed here follow in module order — they are the shapes that already
@@ -326,3 +347,9 @@ def all_queries() -> dict[str, QuerySpec]:
     ordered = {name: merged[name] for name in PRIORITY}
     ordered.update({name: spec for name, spec in merged.items() if name not in ordered})
     return ordered
+
+
+def gfe_queries() -> dict[str, QuerySpec]:
+    """The GFE engine's entries, in ``GFE_ENTRIES`` order."""
+    specs = all_queries()
+    return {name: specs[name] for name in GFE_ENTRIES}

@@ -448,8 +448,14 @@ def blocked_match_pairs_gated(
         # pipeline once per broadcast build — sequential builds cannot
         # reuse each other's un-exchanged lineage (measured at the 10x
         # slice: two ~19 task-CPU-s build stages for one pipeline).
-        # With the pin, build 2 reads a ReusedExchange.
-        .repartition(F.col("block"), F.col("__na"))
+        # With the pin, build 2 reads a ReusedExchange. The keys are
+        # ordered (__na, block) on purpose: when AQE streams the __na side
+        # of the candidate join, its output is already hash-partitioned on
+        # (block, __na), and the planner drops a column repartition whose
+        # partitioning equals its child's, so a (block, __na) pin vanished
+        # whenever that side won the runtime build-side race. The reordered
+        # keys still satisfy the expansion join's (block, __na) clustering.
+        .repartition(F.col("__na"), F.col("block"))
     )
     ma = m.select(
         "block",

@@ -11,9 +11,7 @@ import os
 
 from pyspark.sql import SparkSession
 
-#: The core count assumed when $SPARK_GRAFT_CPUS is unset — the single
-#: source of truth for "default core count" (bench.py's trend gate
-#: compares against this, r13 advice).
+#: The core count assumed when $SPARK_GRAFT_CPUS is unset.
 DEFAULT_CPUS = "32"
 
 _DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", DEFAULT_CPUS)

@@ -212,21 +212,26 @@ def run_incremental(
         dat = os.path.join(data_dir, f"hla.{release}.dat")
         alleles = read_imgt_dat(spark, dat)
         tables = build_release(spark, alleles, release, registry, **build_kwargs)
-        # pre/post invariant probe around the commit (the reference runs
-        # its validation queries before AND after load so deltas are
-        # observable, pipeline.asl.json:4-9,223-228)
-        pre = validation_snapshot(graph)
-        # bucket-pruned MERGE commit: each table rewrites only the key
-        # buckets this release touches (plans/txtable.py), not the whole
-        # accumulated graph. Commit order = data first, then state
-        # (crash-safe: a replayed release re-MERGEs idempotently, ST3).
-        upsert_graph(
-            load_release(spark, tables, release),
-            graph_path,
-            n_buckets=n_buckets,
-        )
-        graph = GraphTables.load(spark, graph_path)
-        post = validation_snapshot(graph)
+        try:
+            # pre/post invariant probe around the commit (the reference runs
+            # its validation queries before AND after load so deltas are
+            # observable, pipeline.asl.json:4-9,223-228)
+            pre = validation_snapshot(graph)
+            # bucket-pruned MERGE commit: each table rewrites only the key
+            # buckets this release touches (plans/txtable.py), not the whole
+            # accumulated graph. Commit order = data first, then state
+            # (crash-safe: a replayed release re-MERGEs idempotently, ST3).
+            upsert_graph(
+                load_release(spark, tables, release),
+                graph_path,
+                n_buckets=n_buckets,
+            )
+            graph = GraphTables.load(spark, graph_path)
+            post = validation_snapshot(graph)
+        finally:
+            # the build's caches serve this release only; a long-running
+            # process must not keep every release's alleles and features
+            tables.unpersist()
         if not load_invariants_ok(pre, post):
             # the watermark is NOT committed: the release replays after the
             # regression is diagnosed; failing loud beats a silent shrink

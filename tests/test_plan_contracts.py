@@ -421,13 +421,13 @@ def test_gated_match_expansion_reuses_candidate_pipeline(spark):
         m.group(1)
         for m in re.finditer(
             r"\((\d+)\) Exchange\n[^\n]*\nArguments: hashpartitioning\("
-            r"[^)]*block[^)]*__na[^)]*\), REPARTITION_BY_COL",
+            r"[^)]*__na[^)]*block[^)]*\), REPARTITION_BY_COL",
             plan,
         )
         if m.group(1) in final_ids
     }
     assert pinned_ids, (
-        f"pinned REPARTITION_BY_COL (block, __na) exchange missing from the "
+        f"pinned REPARTITION_BY_COL (__na, block) exchange missing from the "
         f"final plan:\n{span[:1500]}"
     )
     assert re.search(r"ReusedExchange", span), span[:1500]

@@ -6,6 +6,8 @@ from __future__ import annotations
 import json
 import os
 
+import pytest
+
 from gfe_db_spark.streaming.incremental import (
     ReleaseState,
     detect_new_releases,
@@ -87,6 +89,52 @@ def test_run_incremental_end_to_end(spark, tmp_path):
     )
     assert res2.processed == []
     assert res2.graph.nodes_gfe.count() == res.graph.nodes_gfe.count()
+
+
+def _persistent_rdd_ids(spark) -> set[int]:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
+def test_run_incremental_releases_build_caches(spark, tmp_path):
+    """A release's build caches die with the release: after
+    `run_incremental` returns, the block manager holds no RDD it did not
+    hold before the call (the session is shared, so compare sets)."""
+    data_dir = str(tmp_path)
+    fx.write_release_dat(data_dir, "3550")
+    fx.write_release_dat(data_dir, "3560")
+    before = _persistent_rdd_ids(spark)
+    res = run_incremental(
+        spark,
+        data_dir,
+        ["3550", "3560"],
+        state_path=str(tmp_path / "state.json"),
+        registry_path=str(tmp_path / "registry"),
+        graph_path=str(tmp_path / "graph"),
+    )
+    assert res.processed == ["3550", "3560"]
+    assert _persistent_rdd_ids(spark) - before == set()
+
+
+def test_failed_release_releases_build_caches(spark, tmp_path, monkeypatch):
+    """The caches are released when the commit fails too."""
+    from gfe_db_spark.streaming import incremental
+
+    def failing_commit(*args, **kwargs):
+        raise RuntimeError("injected commit failure")
+
+    monkeypatch.setattr(incremental, "upsert_graph", failing_commit)
+    fx.write_release_dat(str(tmp_path), "3550")
+    before = _persistent_rdd_ids(spark)
+    with pytest.raises(RuntimeError, match="injected commit failure"):
+        run_incremental(
+            spark,
+            str(tmp_path),
+            ["3550"],
+            state_path=str(tmp_path / "state.json"),
+            registry_path=str(tmp_path / "registry"),
+            graph_path=str(tmp_path / "graph"),
+        )
+    assert _persistent_rdd_ids(spark) - before == set()
 
 
 def test_structured_streaming_windows(spark):

@@ -10,22 +10,12 @@ master launches REAL separate worker JVMs (each forking its own Python
 workers) with real executor-to-executor shuffle and broadcast transport,
 while still needing no daemons.
 
-This tool runs the hardest-shape registry entries under BOTH masters in
-separate subprocesses and compares canonicalized result hashes:
-
-  - gfe_end_to_end      — full ETL + serialized tx-registry commit
-                          (driver/executor filesystem split, mapInPandas
-                          parse on remote Python workers)
-  - dedup_clusters      — iterative CC loop; under local-cluster a
-                          reliable checkpoint dir is configured, so this
-                          is the first real exercise of the r12
-                          `.checkpoint()` mode across JVM boundaries
-  - bloom_decontaminate — the k-times-reused broadcast exchange, over
-                          real network transport
-  - imgt_stream_scan    — registered streaming DataSource (checkpointed
-                          microbatches) with executors in other JVMs
-  - stream_stream_join  — watermarked stream-stream join state
-  - knn_ivf_trained     — centroid broadcast + dynamic partition pruning
+This tool runs the GFE engine's registry entries (queries.GFE_ENTRIES:
+the GFE pipeline, naming, Cypher, alignment and txtable entries), or the
+ones named by --names, under BOTH masters in separate subprocesses and
+compares canonicalized result hashes. Under local-cluster a reliable
+checkpoint dir is configured, so entries with iterative `.checkpoint()`
+loops (dedup_clusters, via --names) exercise it across JVM boundaries.
 
 Every selected entry is driver-hash-green vs DuckDB, so its output is
 deterministic under any partitioning; a hash difference here is a real
@@ -49,14 +39,8 @@ import time
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, _REPO)
 
-ENTRIES = [
-    "gfe_end_to_end",
-    "dedup_clusters",
-    "bloom_decontaminate",
-    "imgt_stream_scan",
-    "stream_stream_join",
-    "knn_ivf_trained",
-]
+from gfe_db_spark.queries import GFE_ENTRIES  # noqa: E402
+
 
 SF_DIR_DEFAULT = "/root/testdata/sf0.001"
 CLUSTER_MASTER = "local-cluster[2,4,4096]"
@@ -183,7 +167,7 @@ def main() -> int:
     ap.add_argument("--master")
     ap.add_argument("--out")
     ap.add_argument("--sf-dir", default=SF_DIR_DEFAULT)
-    ap.add_argument("--names", default=",".join(ENTRIES))
+    ap.add_argument("--names", default=",".join(GFE_ENTRIES))
     args = ap.parse_args()
     names = [n for n in args.names.split(",") if n]
     if args.master:
