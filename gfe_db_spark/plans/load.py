@@ -3,7 +3,7 @@ DataFrames with MERGE (dedup-upsert) semantics.
 
 The ten `apoc.periodic.iterate` statements in `load.cyp:1-138` become ten
 DataFrame pipelines. Cross-release accumulation (`ON MATCH SET`) is
-`upsert_graph`'s per-table bucketed MERGE into manifest-pointer tables;
+`upsert_graph`'s per-table MERGE into manifest-pointer tables;
 the releases array union is the exact builtin composition
 `array_sort ∘ array_distinct ∘ array_union` (`load.cyp:95`).
 
@@ -261,16 +261,18 @@ def _merge_args(
 def upsert_graph(
     new: GraphTables,
     graph_path: str,
-    n_buckets: int = 16,
+    n_buckets: int = 1,
     layout: str = "tx",
 ) -> dict[str, list[int]]:
     """Commit one release's graph tables into the on-disk accumulated graph:
-    each table is a manifest-pointer table (`plans/txtable.tx_upsert`),
-    hash-bucketed on its merge key, and only the buckets this release
-    touches are read and rewritten — commit cost is O(release), not
-    O(accumulated graph). Each table's ON MATCH rule is its MERGE_RULES
-    entry, applied by `plans/merge.merge_clustered`. Returns touched
-    buckets per table.
+    each table is a manifest-pointer table (`plans/txtable.tx_upsert`)
+    keyed on its merge key. IMGT/HLA releases are cumulative, so every
+    release re-sends every allele and touches every key: bucket pruning
+    cannot skip anything, and each table is stored as ONE bucket that a
+    release rewrites in one new file. `n_buckets` sizes a new table only;
+    an existing table keeps the count its manifest records. Each table's
+    ON MATCH rule is its MERGE_RULES entry, applied by
+    `plans/merge.merge_clustered`. Returns touched buckets per table.
 
     A table commit lands in a fresh generation dir published by an atomic
     manifest rename. On top, ONE graph-level manifest
@@ -289,6 +291,7 @@ def upsert_graph(
         current_manifest_number,
         latest_numbered_json,
         publish_numbered_json,
+        read_manifest,
         tx_upsert,
     )
 
@@ -311,12 +314,14 @@ def upsert_graph(
     def commit_one(item):
         name, df = item
         keys, on_match, merge_fn = _merge_args(name)
+        root = os.path.join(graph_path, name)
+        m = read_manifest(spark, root)
         return name, tx_upsert(
             df,
-            os.path.join(graph_path, name),
+            root,
             keys,
             on_match=on_match,
-            n_buckets=n_buckets,
+            n_buckets=n_buckets if m is None else m["n_buckets"],
             merge_fn=merge_fn,
         )
 

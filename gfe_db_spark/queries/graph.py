@@ -85,16 +85,17 @@ def _fixture_build(spark: SparkSession, with_alignments: bool = False):
     deterministic mini-release (plus MSF alignments when asked) into a
     per-variant scratch dir and run the real parse → accession → build
     pipeline. The scratch dir is FIXED and wiped on entry (not mkdtemp):
-    repeated driver/judge sweeps replace it instead of accumulating
-    copies; it must outlive this function because the returned build
-    tables are lazy over its files — the next invocation is the cleanup
-    point (same contract as warehouse.txtable_upsert's scratch root)."""
+    repeated sweeps replace it instead of accumulating copies; it must
+    outlive this function because the returned build tables are lazy over
+    its files, so it is removed when the interpreter exits (same contract
+    as warehouse.txtable_upsert's scratch root)."""
     import os
     import shutil
     import tempfile
 
     from gfe_db_spark.plans.accession import AccessionRegistry
     from gfe_db_spark.plans.build import build_release
+    from gfe_db_spark.session import remove_at_exit
     from gfe_db_spark.sources.imgt import read_imgt_dat
     from gfe_db_spark.testing_fixtures import write_msf, write_release_dat
 
@@ -103,7 +104,7 @@ def _fixture_build(spark: SparkSession, with_alignments: bool = False):
     # the wipe-on-entry bounds accumulation, and callers consume each
     # invocation's result before the next (harnesses are sequential)
     variant = "aligned" if with_alignments else "plain"
-    tmp = f"{tempfile.gettempdir()}/gfe_fx_{variant}_{os.getpid()}"
+    tmp = remove_at_exit(f"{tempfile.gettempdir()}/gfe_fx_{variant}_{os.getpid()}")
     shutil.rmtree(tmp, ignore_errors=True)
     os.makedirs(tmp, exist_ok=True)
     dat = write_release_dat(tmp, "3550")

@@ -815,16 +815,17 @@ def txtable_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from gfe_db_spark.plans import txtable as TX
+    from gfe_db_spark.session import remove_at_exit
 
     ev = table(spark, sf_dir, "events").select("event_id", "user_id", "value")
-    # one fixed scratch root, wiped on entry: repeated driver/judge sweeps
-    # replace the table instead of accumulating mkdtemp copies (the result
-    # DataFrame is lazy, so the dir must outlive this function — the next
-    # invocation, not a finally block, is the cleanup point)
+    # one fixed scratch root, wiped on entry: repeated sweeps replace the
+    # table instead of accumulating mkdtemp copies (the result DataFrame is
+    # lazy, so the dir must outlive this function — interpreter exit, not a
+    # finally block, removes it)
     import os
 
     # pid-suffixed: concurrent processes never wipe each other's table
-    scratch = f"{tempfile.gettempdir()}/gfe_txtable_demo_{os.getpid()}"
+    scratch = remove_at_exit(f"{tempfile.gettempdir()}/gfe_txtable_demo_{os.getpid()}")
     shutil.rmtree(scratch, ignore_errors=True)
     root = scratch + "/events_tx"
     TX.tx_upsert(ev, root, ["event_id"], n_buckets=8)
@@ -877,11 +878,12 @@ def txtable_time_travel_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from gfe_db_spark.plans import txtable as TX
+    from gfe_db_spark.session import remove_at_exit
 
     ev = table(spark, sf_dir, "events").select("event_id", "user_id", "value")
     # same scratch discipline as txtable_upsert: fixed pid-suffixed root,
-    # wiped on entry (the lazy result outlives this function)
-    scratch = f"{tempfile.gettempdir()}/gfe_txtable_tt_{os.getpid()}"
+    # wiped on entry and at exit (the lazy result outlives this function)
+    scratch = remove_at_exit(f"{tempfile.gettempdir()}/gfe_txtable_tt_{os.getpid()}")
     shutil.rmtree(scratch, ignore_errors=True)
     root = scratch + "/events_tt"
     TX.tx_upsert(ev.filter(F.col("event_id") % 2 == 0), root, ["event_id"], n_buckets=8)

@@ -7,7 +7,9 @@ Local mode (``local[N]``) is a single JVM; the same configuration
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
 
 from pyspark.sql import SparkSession
 
@@ -88,7 +90,7 @@ def ship_package(spark: SparkSession) -> None:
     zpath = os.path.join(
         tempfile.gettempdir(), f"gfe_db_spark_pkg_{os.getpid()}_{id(spark)}.zip"
     )
-    with zipfile.ZipFile(zpath, "w") as z:
+    with zipfile.ZipFile(remove_at_exit(zpath), "w") as z:
         for root, _dirs, files in os.walk(pkg_dir):
             for fname in files:
                 if fname.endswith(".py"):
@@ -97,3 +99,24 @@ def ship_package(spark: SparkSession) -> None:
                     z.write(full, rel)
     spark.sparkContext.addPyFile(zpath)
     spark._gfe_db_spark_shipped = True
+
+
+_EXIT_PATHS: set[str] = set()
+
+
+def _remove_exit_paths() -> None:
+    for path in _EXIT_PATHS:
+        if os.path.isdir(path):
+            shutil.rmtree(path, ignore_errors=True)
+        elif os.path.exists(path):
+            os.remove(path)
+
+
+def remove_at_exit(path: str) -> str:
+    """Delete `path` (a file or a directory tree) when the interpreter
+    exits, and return it: for scratch output that lazy frames read after
+    the call that wrote it returns."""
+    if not _EXIT_PATHS:
+        atexit.register(_remove_exit_paths)
+    _EXIT_PATHS.add(path)
+    return path

@@ -170,7 +170,7 @@ def run_incremental(
     state_path: str,
     registry_path: str,
     graph_path: str,
-    n_buckets: int = 16,
+    n_buckets: int = 1,
     vacuum_every: int | None = 8,
     keep_graph_manifests: int = 2,
     vacuum_grace_seconds: float | None = None,
@@ -217,10 +217,10 @@ def run_incremental(
             # its validation queries before AND after load so deltas are
             # observable, pipeline.asl.json:4-9,223-228)
             pre = validation_snapshot(graph)
-            # bucket-pruned MERGE commit: each table rewrites only the key
-            # buckets this release touches (plans/txtable.py), not the whole
-            # accumulated graph. Commit order = data first, then state
-            # (crash-safe: a replayed release re-MERGEs idempotently, ST3).
+            # MERGE commit: a cumulative release touches every key, so each
+            # graph table is one bucket, rewritten as one file per release.
+            # Commit order = data first, then state (crash-safe: a replayed
+            # release re-MERGEs idempotently, ST3).
             upsert_graph(
                 load_release(spark, tables, release),
                 graph_path,

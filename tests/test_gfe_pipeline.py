@@ -716,6 +716,68 @@ def test_reference_depth_47_release_history(spark, tmp_path_factory):
     assert res.processed == [] and res.rejected == []
 
 
+def _two_synthetic_releases(tmp: str) -> list[str]:
+    import gfe_db_spark.testing_fixtures as tfx
+
+    releases = ["3300", "3310"]
+    for j, rel in enumerate(releases):
+        tfx.write_synthetic_dat(tmp, rel, 12 + 3 * j)  # cumulative, 3 new alleles
+    return releases
+
+
+def test_graph_tables_default_to_one_bucket(spark, tmp_path_factory):
+    """IMGT releases are cumulative, so a release touches every key of
+    every graph table and bucket pruning has nothing to skip: under the
+    defaults each table is ONE bucket, and a snapshot holds exactly one
+    file per table."""
+    import os as _os
+
+    from gfe_db_spark.plans import txtable as TX
+    from gfe_db_spark.streaming.incremental import run_incremental
+
+    tmp = str(tmp_path_factory.mktemp("one_bucket"))
+    releases = _two_synthetic_releases(tmp)
+    graph_path = f"{tmp}/graph"
+    res = run_incremental(
+        spark, tmp, releases, f"{tmp}/state.json", f"{tmp}/registry", graph_path
+    )
+    assert res.processed == releases
+    for name, df in GraphTables.load(spark, graph_path).items():
+        m = TX.read_manifest(spark, _os.path.join(graph_path, name))
+        assert m["n_buckets"] == 1, (name, m)
+        assert len(df.inputFiles()) == 1, (name, df.inputFiles())
+
+
+def test_existing_graph_keeps_its_bucket_count(spark, tmp_path_factory):
+    """`n_buckets` sizes a new table only: a graph created with 4 buckets
+    takes its next release under the defaults, keeps 4 buckets, and
+    answers exactly like a 1-bucket graph fed the same releases."""
+    import os as _os
+
+    from gfe_db_spark.plans import txtable as TX
+    from gfe_db_spark.streaming.incremental import run_incremental
+
+    tmp = str(tmp_path_factory.mktemp("kept_buckets"))
+    releases = _two_synthetic_releases(tmp)
+
+    def run(graph: str, upto: int, **kw):
+        return run_incremental(
+            spark, tmp, releases[:upto], f"{tmp}/{graph}.json",
+            f"{tmp}/{graph}_registry", f"{tmp}/{graph}", **kw,
+        )
+
+    run("four", 1, n_buckets=4)
+    four = run("four", 2)
+    assert four.processed == ["3310"]
+    one = run("one", 2)
+    assert one.processed == releases
+    for name, df in four.graph.items():
+        m = TX.read_manifest(spark, _os.path.join(tmp, "four", name))
+        assert m["n_buckets"] == 4, (name, m)
+        got = sorted(df.collect(), key=repr)
+        assert got == sorted(getattr(one.graph, name).collect(), key=repr), name
+
+
 def test_graph_layout_switch_is_refused(spark, tmp_path_factory):
     """A tx commit into a graph path holding non-manifest data would start
     from an empty table and publish a graph manifest hiding that data —
