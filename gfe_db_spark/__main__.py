@@ -5,6 +5,7 @@ query runner over the registered inventory.
     python -m gfe_db_spark build -i hla.3560.dat -r 3560 -o out/ [--limit N]
     python -m gfe_db_spark load --manifest file:///.../manifest.json \
         --staging st/ --state state.json --registry reg/ --graph graph/
+    python -m gfe_db_spark snapshot save|list|restore|diff --graph graph/ [--version v0001]
     python -m gfe_db_spark query gfe_naming
     python -m gfe_db_spark list
 
@@ -127,48 +128,32 @@ def cmd_query(args) -> int:
 
 
 def cmd_snapshot(args) -> int:
-    """S12 backup/restore/diff surface (the reference's backup scripts)."""
-    from gfe_db_spark.plans.load import GraphTables
+    """S12 backup/restore/diff surface (the reference's backup scripts): a
+    snapshot pins a graph manifest of `--graph`, and `restore` rolls that
+    graph back in place, data and release watermark together."""
     from gfe_db_spark.plans.snapshots import (
         list_snapshots,
-        load_snapshot,
+        restore_snapshot,
         save_snapshot,
         snapshot_diff,
     )
 
     spark = _spark("gfe-snapshot")
     if args.action == "save":
-        graph = GraphTables.load(spark, args.graph)
-        name = save_snapshot(graph, args.root)
-        print(f"saved {name}")
+        print(f"saved {save_snapshot(spark, args.graph)}")
     elif args.action == "list":
-        for name in list_snapshots(spark, args.root):
-            print(name)
+        for name, gm in list_snapshots(spark, args.graph).items():
+            print(f"{name}  graph manifest {gm}")
     elif args.action == "restore":
-        # the snapshot is committed like a release load, so the restored
-        # graph is one the next `load` can extend; merging it over a live
-        # graph would not roll that graph back, so only an absent or empty
-        # target is accepted
-        from gfe_db_spark.plans.load import upsert_graph
-        from gfe_db_spark.plans.txtable import _list_names
-
-        if _list_names(spark, args.graph):
-            print(
-                f"refusing to restore into {args.graph}: it already holds data; "
-                "restore into an absent or empty path",
-                file=sys.stderr,
-            )
-            return 1
-        upsert_graph(load_snapshot(spark, args.root, args.version), args.graph)
-        print(f"restored {args.version or 'latest'} -> {args.graph}")
+        n = restore_snapshot(spark, args.graph, args.version)
+        print(f"restored {args.version or 'latest'} -> {args.graph} (graph manifest {n})")
     elif args.action == "diff":
-        versions = list_snapshots(spark, args.root)
+        versions = list(list_snapshots(spark, args.graph))
         if len(versions) < 2 and not (args.version and args.against):
             print("need two snapshots to diff", file=sys.stderr)
             return 1
-        old = load_snapshot(spark, args.root, args.against or versions[-2])
-        new = load_snapshot(spark, args.root, args.version or versions[-1])
-        snapshot_diff(old, new).show(50, truncate=False)
+        diff = snapshot_diff(spark, args.graph, args.against or versions[-2], args.version)
+        diff.show(50, truncate=False)
     return 0
 
 
@@ -222,7 +207,7 @@ def main(argv: list[str] | None = None) -> int:
     ld = sub.add_parser("load", help="incremental fetch+build+graph-load from a manifest")
     ld.add_argument("--manifest", required=True, help="URL of the release manifest JSON")
     ld.add_argument("--staging", required=True)
-    ld.add_argument("--state", required=True)
+    ld.add_argument("--state", required=True, help="watermark export path (never read back)")
     ld.add_argument("--registry", required=True)
     ld.add_argument("--graph", required=True)
     ld.set_defaults(fn=cmd_load)
@@ -239,8 +224,7 @@ def main(argv: list[str] | None = None) -> int:
 
     sn = sub.add_parser("snapshot", help="graph snapshot save/list/restore/diff (S12)")
     sn.add_argument("action", choices=["save", "list", "restore", "diff"])
-    sn.add_argument("--root", required=True, help="snapshot root directory")
-    sn.add_argument("--graph", help="graph dir (source for save, target for restore)")
+    sn.add_argument("--graph", required=True, help="graph dir whose snapshots these are")
     sn.add_argument("--version", help="snapshot version, e.g. v0002 (default latest)")
     sn.add_argument("--against", help="older version for diff (default second-latest)")
     sn.set_defaults(fn=cmd_snapshot)

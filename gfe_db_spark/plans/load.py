@@ -18,9 +18,11 @@ Key corrections over the reference (SURVEY §7 "inconsistencies"):
 
 from __future__ import annotations
 
+import json
 import os
 from collections.abc import Callable
 from dataclasses import dataclass, fields
+from typing import ClassVar
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -28,6 +30,19 @@ from pyspark.sql.window import Window as W
 
 from gfe_db_spark.functions.scalars import release_undotted
 from gfe_db_spark.plans.build import BuildTables
+from gfe_db_spark.plans.merge import fs_exists
+from gfe_db_spark.plans.txtable import (
+    DEFAULT_GRACE_SECONDS,
+    fs_delete,
+    fs_read_text,
+    latest_numbered_json,
+    numbered_jsons,
+    publish_numbered_json,
+    read_manifest,
+    tx_read,
+    tx_upsert,
+    tx_vacuum,
+)
 
 # ref load.cyp:11-16 singleton
 SUBMITTER = {
@@ -51,31 +66,27 @@ class GraphTables:
     edges_submitted: DataFrame
     edges_has_sequence: DataFrame
     edges_has_feature: DataFrame
+    # the release the tables hold: set by `load_release`, recorded in the
+    # graph manifest by `upsert_graph`; not a field, so not in `items()`
+    release: ClassVar[str | None] = None
 
     def items(self):
         return [(f.name, getattr(self, f.name)) for f in fields(self)]
 
     @staticmethod
-    def load(spark: SparkSession, path: str) -> "GraphTables":
-        """Load the accumulated graph. A `_graph_manifests` child marks a
-        graph committed by `upsert_graph`: ONE graph-manifest read pins
-        every table to the generation the same load committed, so the
-        snapshot is consistent ACROSS tables, not just within each (a
-        reader polling during a release load sees the whole graph before
-        the load or the whole graph after it, the isolation the reference
-        gets from Neo4j transactions, ref load.cyp:9). Without it, each
-        table resolves through its own latest manifest (a load that
-        crashed before its first graph-manifest publish). A path with
-        neither kind of manifest raises FileNotFoundError (`tx_read`)."""
-        from gfe_db_spark.plans.txtable import latest_numbered_json, tx_read
-
-        _n, gdoc = latest_numbered_json(spark, _graph_manifest_dir(path))
-        pins = gdoc["tables"] if gdoc is not None else {}
+    def load(spark: SparkSession, path: str, as_of: int | None = None) -> "GraphTables":
+        """Open the graph under `path` through ONE graph manifest: the
+        newest, or number `as_of` while it is retained (`vacuum_graph`
+        keeps the newest few and every snapshot pin). It pins every table
+        to the generation one load committed, so the snapshot is
+        consistent ACROSS tables: a reader polling during a release load
+        sees the whole graph before the load or after it (see
+        `upsert_graph`). A path with no graph manifest raises
+        FileNotFoundError."""
+        gdoc = read_graph_manifest(spark, path, as_of)
         return GraphTables(**{
-            f.name: tx_read(
-                spark, os.path.join(path, f.name), generation=pins.get(f.name)
-            )
-            for f in fields(GraphTables)
+            name: tx_read(spark, os.path.join(path, name), generation=gen)
+            for name, gen in gdoc["tables"].items()
         })
 
 
@@ -192,7 +203,7 @@ def load_release(
         F.col("accession").alias("dst_accession"),
     ).dropDuplicates()
 
-    return GraphTables(
+    graph = GraphTables(
         nodes_gfe=nodes_gfe,
         nodes_sequence=nodes_sequence,
         nodes_feature=nodes_feature,
@@ -205,6 +216,8 @@ def load_release(
         edges_has_sequence=edges_has_sequence,
         edges_has_feature=edges_has_feature,
     )
+    graph.release = release
+    return graph
 
 
 # ON MATCH rule per table, mirroring load.cyp: (merge keys, rule).
@@ -230,6 +243,18 @@ MERGE_RULES: dict[str, tuple[list[str], str]] = {
 
 def _graph_manifest_dir(graph_path: str) -> str:
     return os.path.join(graph_path, "_graph_manifests")
+
+
+def read_graph_manifest(spark: SparkSession, graph_path: str, n: int | None = None) -> dict:
+    """Graph manifest `n` (default: the newest), the graph's commit record
+    ``{"generation", "tables": {table: generation}, "release",
+    "releases"}``; FileNotFoundError if it is not there."""
+    gmdir = _graph_manifest_dir(graph_path)
+    nums = numbered_jsons(spark, gmdir) if n is None else [n]
+    path = f"{gmdir}/{nums[-1]:08d}.json" if nums else None
+    if path is None or not fs_exists(spark, path):
+        raise FileNotFoundError(f"no committed manifest under {gmdir}")
+    return json.loads(fs_read_text(spark, path))
 
 
 def _releases_union(existing: DataFrame, batch: DataFrame) -> DataFrame:
@@ -275,26 +300,18 @@ def upsert_graph(
     `plans/merge.merge_clustered`. Returns touched buckets per table.
 
     A table commit lands in a fresh generation dir published by an atomic
-    manifest rename. On top, ONE graph-level manifest
-    (``_graph_manifests/N.json``) is published AFTER all 11 table commits,
-    pinning each table to the generation this load produced —
-    `GraphTables.load` resolves through it, so a polling reader sees the
-    whole graph before the load or the whole graph after it, never release
-    N's nodes with release N-1's edges (the cross-table atomicity the
-    reference gets from Neo4j transactions, ref load.cyp:9
-    `apoc.periodic.iterate`).
+    manifest rename. AFTER all 11, ONE graph manifest
+    (``_graph_manifests/N.json``) is published: the graph's one commit
+    point and release record. It pins each table to the generation this
+    load's own commit published and records `new.release` (set by
+    `load_release`) plus the sorted list of committed releases, the
+    watermark. `GraphTables.load` resolves through it, so a polling reader
+    sees the whole graph before the load or after it, never release N's
+    nodes with release N-1's edges (the cross-table atomicity the
+    reference gets from Neo4j transactions, ref load.cyp:9).
 
     `layout` accepts only ``"tx"`` (anything else raises ValueError); the
     keyword stays because existing wrappers forward ``layout="tx"``."""
-    from gfe_db_spark.plans.merge import fs_exists
-    from gfe_db_spark.plans.txtable import (
-        current_manifest_number,
-        latest_numbered_json,
-        publish_numbered_json,
-        read_manifest,
-        tx_upsert,
-    )
-
     if layout != "tx":
         raise ValueError(f"unknown graph layout {layout!r}; only 'tx' is supported")
     # a tx commit into a path holding non-manifest data would start from an
@@ -332,21 +349,23 @@ def upsert_graph(
     from concurrent.futures import ThreadPoolExecutor
 
     with ThreadPoolExecutor(max_workers=8) as pool:
-        touched = dict(pool.map(commit_one, new.items()))
+        commits = dict(pool.map(commit_one, new.items()))
 
     # cross-table atomic publish: pin every table at the generation this
     # load just committed; readers resolve the graph through this single
     # pointer (see GraphTables.load)
-    gens = {
-        name: current_manifest_number(spark, os.path.join(graph_path, name))
-        for name, _df in new.items()
-    }
     gmdir = _graph_manifest_dir(graph_path)
-    n, _doc = latest_numbered_json(spark, gmdir)
-    publish_numbered_json(
-        spark, gmdir, (n or 0) + 1, {"generation": (n or 0) + 1, "tables": gens}
-    )
-    return touched
+    n, prev = latest_numbered_json(spark, gmdir)
+    n = (n or 0) + 1
+    releases = set(prev["releases"] if prev else []) | ({new.release} - {None})
+    doc = {
+        "generation": n,
+        "tables": {name: gen for name, (_t, gen) in commits.items()},
+        "release": new.release,
+        "releases": sorted(releases, key=int),
+    }
+    publish_numbered_json(spark, gmdir, n, doc)
+    return {name: touched for name, (touched, _g) in commits.items()}
 
 
 def vacuum_graph(
@@ -357,39 +376,27 @@ def vacuum_graph(
     grace_seconds: float | None = None,
 ) -> list[str]:
     """Graph-aware vacuum for a graph committed by `upsert_graph`: the
-    ONLY safe way to reclaim space under member tables, because the graph
+    ONLY safe way to reclaim space under member tables, because a graph
     manifest pins each table to a FIXED generation — a per-table
     `tx_vacuum` with no pins can prune the very manifest a retained graph
     manifest still references (two compactions, or keep_manifests=1,
-    suffice), breaking `GraphTables.load` until the next load republishes.
+    suffice), breaking `GraphTables.load`.
 
-    Three steps, each with the same retention contract (a reader that
-    resolved any of the last `keep_graph_manifests` graph snapshots still
-    finds every file it resolved):
-    1. prune graph manifests to the newest `keep_graph_manifests`;
-    2. for each member table, vacuum with the generations pinned by the
-       RETAINED graph manifests unioned into its keep set;
-    3. return every deleted path."""
-    from gfe_db_spark.plans.txtable import (
-        DEFAULT_GRACE_SECONDS,
-        _list_names,
-        fs_delete,
-        fs_read_text,
-        tx_vacuum,
-    )
-    import json
+    It prunes graph manifests to the newest `keep_graph_manifests` plus
+    every snapshot pin (`plans/snapshots.py`), then vacuums each member
+    table with the generations the RETAINED graph manifests pin added to
+    its keep set: a reader that resolved any retained graph manifest still
+    finds every file it resolved. Returns every deleted path."""
+    from gfe_db_spark.plans.snapshots import list_snapshots
 
     if grace_seconds is None:
         grace_seconds = DEFAULT_GRACE_SECONDS
     gmdir = _graph_manifest_dir(graph_path)
-    nums = sorted(
-        int(n[:-5])
-        for n in _list_names(spark, gmdir)
-        if n.endswith(".json") and n[:-5].isdigit()
-    )
+    nums = numbered_jsons(spark, gmdir)
     if not nums:
         raise FileNotFoundError(f"no graph manifests under {graph_path}")
-    retained = nums[-max(keep_graph_manifests, 1):]
+    retained = set(nums[-max(keep_graph_manifests, 1):])
+    retained |= set(list_snapshots(spark, graph_path).values()) & set(nums)
     removed: list[str] = []
     for n in nums:
         if n not in retained:
@@ -398,9 +405,8 @@ def vacuum_graph(
             removed.append(path)
     # union of per-table generations pinned by the retained graph snapshots
     pins: dict[str, set[int]] = {}
-    for n in retained:
-        doc = json.loads(fs_read_text(spark, f"{gmdir}/{n:08d}.json"))
-        for tname, gen in doc["tables"].items():
+    for n in sorted(retained):
+        for tname, gen in read_graph_manifest(spark, graph_path, n)["tables"].items():
             pins.setdefault(tname, set()).add(gen)
     for f in fields(GraphTables):
         removed.extend(

@@ -1,99 +1,114 @@
 """S12 depth: versioned graph snapshots + snapshot diff.
 
 The reference's backup story is S3 prefix-per-release copies
-(ref ``run.sh:161-172``, restore = repoint `load_db.sh` at a prefix).
-Spark-native form: each snapshot is a directory ``<root>/v<NNNN>`` holding
-a manifest graph committed by `upsert_graph` — the same store format as
-the live graph, as the reference's backups are dumps of its one store —
-plus a diff operator that compares two snapshots table-by-table — the
-release-audit tool (`what changed in 3560?`) the reference answers by
-re-running Cypher counts.
+(ref ``run.sh:161-172``). Here the graph manifests (`plans/load`) already
+pin every table generation and record the committed releases, so a
+snapshot copies nothing: it is a retention pin
+``<graph>/_snapshots/<n:08d>.json`` = ``{"graph_manifest": N}`` (version
+``v<nnnn>``) that `vacuum_graph` honours — time travel and rollback kept in
+the log that commits the data, as in Iceberg and Delta.
 """
 
 from __future__ import annotations
 
+import json
 import os
-import re
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from gfe_db_spark.plans.load import MERGE_RULES, GraphTables, upsert_graph
-
-_VERSION_RE = re.compile(r"^v(\d{4})$")
-
-
-def list_snapshots(spark: SparkSession, root: str) -> list[str]:
-    """Snapshot versions under root, ascending (Hadoop FS — works on
-    hdfs/s3a prefixes too)."""
-    from gfe_db_spark.plans.merge import hadoop_fs
-
-    fs, hpath = hadoop_fs(spark, root)
-    if not fs.exists(hpath):
-        return []
-    names = [s.getPath().getName() for s in fs.listStatus(hpath)]
-    return sorted(n for n in names if _VERSION_RE.match(n))
+from gfe_db_spark.plans.load import MERGE_RULES, _graph_manifest_dir, read_graph_manifest
+from gfe_db_spark.plans.txtable import (
+    _commit_manifest,
+    current_manifest_number,
+    fs_read_text,
+    latest_numbered_json,
+    numbered_jsons,
+    publish_numbered_json,
+    read_manifest,
+    tx_changes,
+)
 
 
-def save_snapshot(graph: GraphTables, root: str) -> str:
-    """Commit `graph` into the next, empty version directory (v0001,
-    v0002, …) through `upsert_graph`; returns its name. Append-only:
-    existing snapshots are never touched, so restore is
-    `load_snapshot(root, version)` and rollback is a repoint."""
-    spark = graph.nodes_gfe.sparkSession
-    existing = list_snapshots(spark, root)
-    nxt = 1 + (int(_VERSION_RE.match(existing[-1]).group(1)) if existing else 0)
-    name = f"v{nxt:04d}"
-    upsert_graph(graph, os.path.join(root, name))
-    return name
+def list_snapshots(spark: SparkSession, graph_path: str) -> dict[str, int]:
+    """Snapshot version -> the graph-manifest number it pins (the `as_of`
+    that opens it with `GraphTables.load`), ascending. Hadoop FS — works
+    on hdfs/s3a prefixes too."""
+    sdir = os.path.join(graph_path, "_snapshots")
+    return {
+        f"v{n:04d}": json.loads(fs_read_text(spark, f"{sdir}/{n:08d}.json"))["graph_manifest"]
+        for n in numbered_jsons(spark, sdir)
+    }
 
 
-def load_snapshot(spark: SparkSession, root: str, version: str | None = None) -> GraphTables:
-    """Load a snapshot (default: latest)."""
-    versions = list_snapshots(spark, root)
-    if not versions:
-        raise FileNotFoundError(f"no snapshots under {root}")
-    return GraphTables.load(spark, os.path.join(root, version or versions[-1]))
+def _pinned(spark: SparkSession, graph_path: str, version: str | None) -> dict:
+    """The graph manifest snapshot `version` (default: the latest) pins."""
+    pins = list_snapshots(spark, graph_path)
+    if version is None and pins:
+        version = list(pins)[-1]
+    if version not in pins:
+        raise FileNotFoundError(f"no snapshot {version} under {graph_path}")
+    return read_graph_manifest(spark, graph_path, pins[version])
 
 
-def snapshot_diff(old: GraphTables, new: GraphTables) -> DataFrame:
-    """Table-by-table diff on merge keys: rows added / removed / changed
-    between two snapshots. Fully lazy: each table is one full-outer join of
-    per-row signatures (key + md5 of the sorted, concatenated row) reduced
-    to a single counts row; the tables union into one plan, so the whole
-    diff is one Spark action with only keyed equi-join shuffles — no
-    full-width rows move, and nothing runs until the caller acts."""
+def save_snapshot(spark: SparkSession, graph_path: str) -> str:
+    """Pin the graph's newest graph manifest as the next version (v0001,
+    v0002, …) and return its name. One JSON write; no data moves."""
+    gm = read_graph_manifest(spark, graph_path)["generation"]
+    sdir = os.path.join(graph_path, "_snapshots")
+    n = (latest_numbered_json(spark, sdir)[0] or 0) + 1
+    publish_numbered_json(spark, sdir, n, {"graph_manifest": gm})
+    return f"v{n:04d}"
 
-    def table_delta(name: str, old_df: DataFrame, new_df: DataFrame) -> DataFrame:
-        keys, _rule = MERGE_RULES[name]
 
-        def row_sig(df: DataFrame, sig_name: str) -> DataFrame:
-            cols = sorted(df.columns)
-            sig = F.md5(
-                F.concat_ws(
-                    "\x00", *[F.coalesce(F.col(c).cast("string"), F.lit("\x01")) for c in cols]
-                )
-            )
-            return df.select(*keys, sig.alias(sig_name))
-
-        joined = row_sig(new_df, "__new_sig").join(
-            row_sig(old_df, "__old_sig"), on=keys, how="full_outer"
+def restore_snapshot(spark: SparkSession, graph_path: str, version: str | None = None) -> int:
+    """Roll the live graph back to snapshot `version` (default: latest) in
+    O(1), copying no data: republish each pinned table manifest as its
+    table's newest generation, then the pinned graph manifest — release
+    record included — as the newest graph manifest. Readers switch at that
+    last publish. The watermark rolls back with the data, so the next load
+    reprocesses every later release on top of the restored generations.
+    Returns the new graph-manifest number."""
+    gdoc = _pinned(spark, graph_path, version)
+    tables = {}
+    for name, gen in gdoc["tables"].items():
+        root = os.path.join(graph_path, name)
+        tables[name] = current_manifest_number(spark, root) + 1
+        _commit_manifest(
+            spark, root, {**read_manifest(spark, root, gen), "generation": tables[name]}
         )
-        def nsum(cond) -> F.Column:
-            return F.coalesce(F.sum(cond.cast("long")), F.lit(0))  # empty table → 0
+    n = read_graph_manifest(spark, graph_path)["generation"] + 1
+    publish_numbered_json(
+        spark, _graph_manifest_dir(graph_path), n, {**gdoc, "generation": n, "tables": tables}
+    )
+    return n
 
-        return joined.agg(
+
+def snapshot_diff(
+    spark: SparkSession, graph_path: str, old: str, new: str | None = None
+) -> DataFrame:
+    """Rows added / removed / changed per table between snapshots `old` and
+    `new` (default: the latest): `tx_changes` rows of each change type
+    between the generations the two pins name — the release audit (`what
+    changed in 3560?`) the reference answers by re-running Cypher counts.
+    Lazy: one union plan, one Spark action when the caller acts."""
+    a, b = (_pinned(spark, graph_path, v)["tables"] for v in (old, new))
+
+    def count(kind: str, alias: str) -> F.Column:
+        hit = (F.col("change_type") == kind).cast("long")
+        return F.coalesce(F.sum(hit), F.lit(0)).alias(alias)  # no rows → 0
+
+    parts = [
+        tx_changes(
+            spark, os.path.join(graph_path, name), a[name], keys, generation=b[name]
+        ).agg(
             F.lit(name).alias("table"),
-            nsum(F.col("__old_sig").isNull()).alias("n_added"),
-            nsum(F.col("__new_sig").isNull()).alias("n_removed"),
-            nsum(
-                F.col("__old_sig").isNotNull()
-                & F.col("__new_sig").isNotNull()
-                & (F.col("__old_sig") != F.col("__new_sig"))
-            ).alias("n_changed"),
+            count("insert", "n_added"),
+            count("delete", "n_removed"),
+            count("update", "n_changed"),
         )
-
-    parts = [table_delta(name, old_df, getattr(new, name)) for name, old_df in old.items()]
+        for name, (keys, _rule) in MERGE_RULES.items()
+    ]
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)

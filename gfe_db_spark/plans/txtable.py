@@ -163,15 +163,21 @@ def _fs_mtime_deep(spark: SparkSession, path: str, depth: int = 2) -> float | No
         return None
 
 
+def numbered_jsons(spark: SparkSession, mdir: str) -> list[int]:
+    """Numbers of the ``{n:08d}.json`` documents under `mdir`, ascending
+    (one directory listing; temp names are skipped)."""
+    return sorted(
+        int(name[:-5])
+        for name in _list_names(spark, mdir)
+        if name.endswith(".json") and name[:-5].isdigit()
+    )
+
+
 def current_manifest_number(spark: SparkSession, root: str) -> int | None:
     """Highest committed manifest number, or None for a missing table.
     One directory listing — no data files are touched."""
-    best = None
-    for name in _list_names(spark, _manifest_dir(root)):
-        if name.endswith(".json") and name[:-5].isdigit():
-            n = int(name[:-5])
-            best = n if best is None or n > best else best
-    return best
+    nums = numbered_jsons(spark, _manifest_dir(root))
+    return nums[-1] if nums else None
 
 
 def read_manifest(
@@ -191,14 +197,10 @@ def read_manifest(
 def latest_numbered_json(spark: SparkSession, mdir: str) -> tuple[int | None, dict | None]:
     """Highest ``{n:08d}.json`` document under `mdir` (generic form of the
     manifest-pointer resolve, reused by the graph-level manifest)."""
-    best = None
-    for name in _list_names(spark, mdir):
-        if name.endswith(".json") and name[:-5].isdigit():
-            n = int(name[:-5])
-            best = n if best is None or n > best else best
-    if best is None:
+    nums = numbered_jsons(spark, mdir)
+    if not nums:
         return None, None
-    return best, json.loads(fs_read_text(spark, f"{mdir}/{best:08d}.json"))
+    return nums[-1], json.loads(fs_read_text(spark, f"{mdir}/{nums[-1]:08d}.json"))
 
 
 def publish_numbered_json(spark: SparkSession, mdir: str, n: int, doc: dict) -> None:
@@ -229,10 +231,8 @@ def _referenced_gen_names(spark: SparkSession, root: str) -> set[str]:
     same cadence it compacts."""
     live: set[str] = set()
     mdir = _manifest_dir(root)
-    for name in _list_names(spark, mdir):
-        if name.endswith(".json") and name[:-5].isdigit():
-            m = json.loads(fs_read_text(spark, f"{mdir}/{name[:-5]}.json"))
-            live.update(_gen_names_of(m))
+    for n in numbered_jsons(spark, mdir):
+        live.update(_gen_names_of(json.loads(fs_read_text(spark, f"{mdir}/{n:08d}.json"))))
     return live
 
 
@@ -442,11 +442,11 @@ def tx_upsert(
     n_buckets: int = DEFAULT_BUCKETS,
     merge_fn=None,
     grace_seconds: float = DEFAULT_GRACE_SECONDS,
-) -> list[int]:
+) -> tuple[list[int], int]:
     """MERGE `batch` into the manifest-pointer table at `root`; returns the
-    touched bucket list. Cost is O(batch + touched buckets): only the
-    buckets the batch hashes to are read, merged (`plans/merge` rules) and
-    written. The commit is a fresh uniquely-named generation dir + an
+    touched bucket list and the generation it published. Cost is O(batch +
+    touched buckets): only the buckets the batch hashes to are read, merged
+    (`plans/merge` rules) and written. The commit is a fresh uniquely-named generation dir + an
     atomic manifest rename, so concurrent readers always see a complete
     before- or after-state, and a conflicting writer cleans up only its
     own staging dir. A commit with a different `n_buckets` than the table
@@ -459,7 +459,7 @@ def tx_upsert(
         batch, root, keys, on_match=on_match, n_buckets=n_buckets, merge_fn=merge_fn
     )
     _publish(spark, root, manifest, gen_dir)
-    return touched
+    return touched, manifest["generation"]
 
 
 def tx_compact(
@@ -576,13 +576,10 @@ def tx_vacuum(
     live: set[str] = set()
     superseded: set[str] = set()
     mdir = _manifest_dir(root)
-    for name in _list_names(spark, mdir):
-        if name.endswith(".json") and name[:-5].isdigit():
-            n = int(name[:-5])
-            m = json.loads(fs_read_text(spark, f"{mdir}/{name[:-5]}.json"))
-            (live if n >= keep_from or n in pins else superseded).update(
-                _gen_names_of(m)
-            )
+    nums = numbered_jsons(spark, mdir)
+    for n in nums:
+        m = json.loads(fs_read_text(spark, f"{mdir}/{n:08d}.json"))
+        (live if n >= keep_from or n in pins else superseded).update(_gen_names_of(m))
     superseded -= live
     now = time.time()
     removed: list[str] = []
@@ -601,13 +598,11 @@ def tx_vacuum(
         if mt is not None and now - mt >= grace_seconds:
             fs_delete(spark, path)
             removed.append(path)
-    for name in _list_names(spark, mdir):
-        if name.endswith(".json") and name[:-5].isdigit():
-            n = int(name[:-5])
-            if n < keep_from and n not in pins:
-                path = f"{mdir}/{name}"
-                fs_delete(spark, path)
-                removed.append(path)
+    for n in nums:
+        if n < keep_from and n not in pins:
+            path = f"{mdir}/{n:08d}.json"
+            fs_delete(spark, path)
+            removed.append(path)
     return removed
 
 

@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 
 from gfe_db_spark.operators import similarity as SIM
 from gfe_db_spark.queries import QuerySpec
+from gfe_db_spark.session import remove_at_exit
 from gfe_db_spark.sources.tables import table
 
 
@@ -797,7 +798,7 @@ def ann_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").cast("int").alias("centroid_id"),
         F.col("embedding").alias("centroid"),
     )
-    path = tempfile.mkdtemp(prefix="gfe_ivf_incr_") + "/index"
+    path = remove_at_exit(tempfile.mkdtemp(prefix="gfe_ivf_incr_")) + "/index"
     SIM.ivf_write_index(
         SIM.ivf_assign(emb.filter(F.col("vec_id") % 2 == 0), centroids), path
     )

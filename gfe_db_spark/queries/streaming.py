@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 
 from gfe_db_spark.queries import QuerySpec
 from gfe_db_spark.queries.warehouse import CDC_APPLY_SQL as _CDC_APPLY_SQL
+from gfe_db_spark.session import remove_at_exit
 from gfe_db_spark.sources.tables import table
 
 SESSION_GAP_MS = 30 * 60 * 1000
@@ -203,7 +204,7 @@ def stream_upsert_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gfe_db_spark.plans.txtable import read_table
     from gfe_db_spark.streaming.structured import foreach_batch_upsert, read_event_stream
 
-    target = tempfile.mkdtemp(prefix="gfe_sink_") + "/events_upserted"
+    target = remove_at_exit(tempfile.mkdtemp(prefix="gfe_sink_")) + "/events_upserted"
     for _ in range(2):  # replay → MERGE idempotence
         events = read_event_stream(spark, f"{sf_dir}/events.parquet")
         q = foreach_batch_upsert(
@@ -304,7 +305,7 @@ def imgt_datasource_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gfe_db_spark.sources.imgt_datasource import register
     from gfe_db_spark.testing_fixtures import write_release_dat
 
-    tmp = tempfile.mkdtemp(prefix="gfe_ds_")
+    tmp = remove_at_exit(tempfile.mkdtemp(prefix="gfe_ds_"))
     dat = write_release_dat(tmp, "3550")
     register(spark)
     df = spark.read.format("imgt").load(dat)
@@ -341,7 +342,7 @@ def imgt_stream_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gfe_db_spark.sources.imgt_stream import register
     from gfe_db_spark.testing_fixtures import write_release_dat
 
-    tmp = tempfile.mkdtemp(prefix="gfe_stream_ds_")
+    tmp = remove_at_exit(tempfile.mkdtemp(prefix="gfe_stream_ds_"))
     watch = f"{tmp}/watch"
     import os
 

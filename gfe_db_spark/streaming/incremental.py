@@ -2,12 +2,19 @@
 
 The reference's orchestration stack (EventBridge cron → Lambda state diff →
 Step Functions → Batch/SSM, `invoke_pipeline/app.py` + `pipeline.asl.json`)
-collapses into: a watermark state document, an anti-join new-release
-detection, a monotonicity guard, and serialized build→load→commit per
-release with idempotent MERGE semantics. Every commit — graph tables,
-graph manifest, accession registry — goes through the manifest-pointer
-protocol (`plans/txtable.py`), so a reader polling during a release load
-always resolves one complete before/after snapshot.
+collapses into: new-release detection against the watermark, a
+monotonicity guard, and serialized build→load→commit per release with
+idempotent MERGE semantics. Every commit — accession registry, graph
+tables, graph manifest — goes through the manifest-pointer protocol
+(`plans/txtable.py`), so a reader polling during a release load always
+resolves one complete before/after snapshot.
+
+The watermark (ST2, the reference's `IMGTHLA-repository-state.json`) is
+the `releases` list of the newest graph manifest, the record that commits
+the graph (`plans/load.upsert_graph`): a release is processed exactly when
+its graph manifest publishes, on any Hadoop store, and a snapshot restore
+rolls the watermark back with the data. `state_path` only receives an
+export of it; nothing reads that file back.
 """
 
 from __future__ import annotations
@@ -22,54 +29,53 @@ from pyspark.sql import SparkSession
 
 from gfe_db_spark.plans.accession import AccessionRegistry
 from gfe_db_spark.plans.build import build_release
-from gfe_db_spark.plans.load import GraphTables, load_release, upsert_graph
+from gfe_db_spark.plans.load import (
+    GraphTables,
+    _graph_manifest_dir,
+    load_release,
+    upsert_graph,
+    vacuum_graph,
+)
+from gfe_db_spark.plans.merge import fs_write_text, hadoop_fs
+from gfe_db_spark.plans.snapshots import list_snapshots
+from gfe_db_spark.plans.txtable import latest_numbered_json, numbered_jsons
 from gfe_db_spark.sources.imgt import read_imgt_dat
 
 # F5 (ref invoke_pipeline/app.py:174-185, app.py:32)
 RELEASE_PATTERN = re.compile(r"^\d{2,3}0$")
 
 
-@dataclass
-class ReleaseState:
-    """ST2: the processed-release watermark
-    (ref `IMGTHLA-repository-state.json`, rewritten after each run)."""
-
-    path: str
-    repository_url: str = "synthetic://imgt-hla"
-    releases: list[str] = field(default_factory=list)
-
-    @classmethod
-    def load(cls, path: str) -> "ReleaseState":
-        if os.path.exists(path):
-            with open(path) as fh:
-                doc = json.load(fh)
-            return cls(
-                path=path,
-                repository_url=doc.get("repository_url", ""),
-                releases=list(doc.get("releases", [])),
-            )
-        return cls(path=path)
-
-    def commit(self, release: str) -> None:
-        """Atomic state append: write-new + rename, only after load
-        succeeded (the reference rewrites the JSON post-run)."""
-        self.releases = sorted({*self.releases, release}, key=int)
-        doc = {
-            "timestamp": datetime.now(timezone.utc).isoformat(timespec="milliseconds"),
-            "repository_url": self.repository_url,
-            "releases": self.releases,
-        }
-        tmp = self.path + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(doc, fh, indent=2)
-        os.replace(tmp, self.path)
+def committed_releases(spark: SparkSession, graph_path: str) -> list[str]:
+    """ST2: the processed-release watermark — the sorted `releases` list
+    of the newest graph manifest ([] before the first commit)."""
+    _n, gdoc = latest_numbered_json(spark, _graph_manifest_dir(graph_path))
+    return [] if gdoc is None else gdoc["releases"]
 
 
-def detect_new_releases(available: list[str], state: ReleaseState) -> list[str]:
+def export_state(spark: SparkSession, path: str, releases: list[str]) -> None:
+    """Write the watermark in the reference's state-file shape
+    (``{"timestamp", "repository_url", "releases"}``) through the Hadoop
+    FS: temp write, then rename over the old export. A store whose rename
+    refuses to replace a file (HDFS) gets delete + rename instead."""
+    doc = {
+        "timestamp": datetime.now(timezone.utc).isoformat(timespec="milliseconds"),
+        "repository_url": "synthetic://imgt-hla",
+        "releases": releases,
+    }
+    tmp = path + ".tmp"
+    fs_write_text(spark, tmp, json.dumps(doc, indent=2))
+    fs, hpath = hadoop_fs(spark, path)
+    htmp = spark._jvm.org.apache.hadoop.fs.Path(tmp)
+    if not fs.rename(htmp, hpath):
+        fs.delete(hpath, False)
+        fs.rename(htmp, hpath)
+
+
+def detect_new_releases(available: list[str], committed: list[str]) -> list[str]:
     """ST1/J7: valid-release filter + set-difference against the watermark
     (ref invoke_pipeline/app.py:258-265), ascending order."""
     valid = [r for r in available if RELEASE_PATTERN.match(r)]
-    new = set(valid) - set(state.releases)
+    new = set(valid) - set(committed)
     return sorted(new, key=int)
 
 
@@ -120,8 +126,7 @@ def run_incremental_from_manifest(
         doc = json.load(resp)
     urls: dict[str, str] = doc["releases"]
     available = list(urls)
-    state = ReleaseState.load(state_path)
-    for release in detect_new_releases(available, state):
+    for release in detect_new_releases(available, committed_releases(spark, graph_path)):
         fetch_release(urls[release], staging_dir, release)
     return run_incremental(
         spark,
@@ -184,20 +189,16 @@ def run_incremental(
     (ST3: MERGE idempotence + watermark skip).
 
     Each graph table commits through the reader-isolated manifest-pointer
-    protocol (plans/txtable.py): a reader polling the graph DURING a
-    release load always sees one complete before/after snapshot — the
-    isolation the reference gets from Neo4j transactions (ref
-    load.cyp:9)."""
-    state = ReleaseState.load(state_path)
-    new = detect_new_releases(available_releases, state)
-
-    from gfe_db_spark.plans.merge import fs_exists
-
-    graph: GraphTables | None = None
-    # Hadoop-FS check (graph_path may be hdfs://s3a://); a populated graph
-    # dir always contains the nodes_gfe table
-    if fs_exists(spark, os.path.join(graph_path, "nodes_gfe")):
-        graph = GraphTables.load(spark, graph_path)
+    protocol (plans/txtable.py), and the graph manifest that pins them also
+    records the release: one publish commits the data and advances the
+    watermark, so a polling reader always sees one complete before/after
+    snapshot — the isolation the reference gets from Neo4j transactions
+    (ref load.cyp:9) — and a crash anywhere before that publish leaves
+    the release to replay idempotently. At the end of every run the
+    watermark is exported to `state_path` (`export_state`)."""
+    committed = committed_releases(spark, graph_path)
+    new = detect_new_releases(available_releases, committed)
+    graph = GraphTables.load(spark, graph_path) if committed else None
 
     registry = AccessionRegistry(spark, registry_path)
     processed: list[str] = []
@@ -206,7 +207,7 @@ def run_incremental(
 
     for release in new:
         # the guard considers history + this release (late/out-of-order data)
-        if not monotonicity_ok([*state.releases, release]):
+        if not monotonicity_ok([*committed, release]):
             rejected.append(release)
             continue
         dat = os.path.join(data_dir, f"hla.{release}.dat")
@@ -218,9 +219,8 @@ def run_incremental(
             # observable, pipeline.asl.json:4-9,223-228)
             pre = validation_snapshot(graph)
             # MERGE commit: a cumulative release touches every key, so each
-            # graph table is one bucket, rewritten as one file per release.
-            # Commit order = data first, then state (crash-safe: a replayed
-            # release re-MERGEs idempotently, ST3).
+            # graph table is one bucket, rewritten as one file per release;
+            # the graph manifest published last records the release
             upsert_graph(
                 load_release(spark, tables, release),
                 graph_path,
@@ -232,35 +232,27 @@ def run_incremental(
             # the build's caches serve this release only; a long-running
             # process must not keep every release's alleles and features
             tables.unpersist()
+        committed = committed_releases(spark, graph_path)
         if not load_invariants_ok(pre, post):
-            # the watermark is NOT committed: the release replays after the
-            # regression is diagnosed; failing loud beats a silent shrink
+            # the release is committed (its graph manifest is the commit
+            # point); failing loud beats a silent shrink, and a snapshot
+            # restore rolls the graph and the watermark back together
             raise RuntimeError(
                 f"post-load invariant violation for release {release}: "
                 f"pre={pre} post={post}"
             )
         validations.append({"release": release, "pre": pre, "post": post})
-        state.commit(release)
         processed.append(release)
         # auto-retention (mirrors the registry's auto-compaction): without
         # it, `_graph_manifests` grows one file — and every member table
         # one manifest + generation — per release until an operator
-        # intervenes. Once the graph-manifest count reaches `vacuum_every`,
-        # the pin-aware `vacuum_graph` prunes to the newest
-        # `keep_graph_manifests` snapshots; a reader that resolved any
-        # retained snapshot still finds every file it resolved, and
-        # provably-superseded generations are reclaimed immediately.
+        # intervenes. Once the unpinned graph-manifest count reaches
+        # `vacuum_every`, the pin-aware `vacuum_graph` prunes to the newest
+        # `keep_graph_manifests` plus the snapshot pins; a reader that
+        # resolved any retained snapshot still finds every file it resolved.
         if vacuum_every is not None:
-            from gfe_db_spark.plans.load import _graph_manifest_dir, vacuum_graph
-            from gfe_db_spark.plans.txtable import _list_names
-
-            gmdir = _graph_manifest_dir(graph_path)
-            n_gm = sum(
-                1
-                for name in _list_names(spark, gmdir)
-                if name.endswith(".json") and name[:-5].isdigit()
-            )
-            if n_gm >= vacuum_every:
+            gms = set(numbered_jsons(spark, _graph_manifest_dir(graph_path)))
+            if len(gms - set(list_snapshots(spark, graph_path).values())) >= vacuum_every:
                 vacuum_graph(
                     spark,
                     graph_path,
@@ -268,6 +260,10 @@ def run_incremental(
                     grace_seconds=vacuum_grace_seconds,
                 )
 
+    if committed:
+        # rewritten after every run (as the reference rewrites its state
+        # file), so a crash between a publish and the export heals next run
+        export_state(spark, state_path, committed)
     return PipelineResult(
         processed=processed, rejected=rejected, graph=graph, validations=validations
     )

@@ -62,61 +62,56 @@ def test_cli_query_and_list(spark, tmp_path, capsys):
 
 
 def test_cli_snapshot_roundtrip(spark, tmp_path, capsys):
-    """snapshot save → list → restore round-trips the graph through the
-    versioned store from the command surface. The restored graph is a
-    live graph the next `load` extends, and restoring over a path that
-    already holds a graph is refused (non-zero exit, graph intact)."""
-    import json
-    import shutil
-
+    """snapshot save → list → diff → restore from the command surface, on
+    the graph's own manifests. Restore rolls the live graph back in place,
+    its data and its release watermark together, so the next `load`
+    reprocesses the later release with the same --state export path."""
     from gfe_db_spark.plans.load import GraphTables
 
     remote = tmp_path / "remote"
     remote.mkdir()
     fx.write_release_dat(str(remote), "3550")
     fx.write_release_dat(str(remote), "3560")
-    manifest = tmp_path / "m.json"
-    manifest.write_text(json.dumps({
-        "releases": {"3550": f"file://{remote}/hla.3550.dat"}
-    }))
-    graph = tmp_path / "graph"
-    assert main([
-        "load", "--manifest", f"file://{manifest}",
-        "--staging", str(tmp_path / "st"),
-        "--state", str(tmp_path / "state.json"),
-        "--registry", str(tmp_path / "reg"),
-        "--graph", str(graph),
-    ]) == 0
-    root = str(tmp_path / "snaps")
-    assert main(["snapshot", "save", "--root", root, "--graph", str(graph)]) == 0
-    assert main(["snapshot", "list", "--root", root]) == 0
-    assert "v0001" in capsys.readouterr().out
-    restored = tmp_path / "graph2"
-    assert main(["snapshot", "restore", "--root", root, "--graph", str(restored)]) == 0
-    n_live = GraphTables.load(spark, str(graph)).nodes_gfe.count()
-    n_restored = GraphTables.load(spark, str(restored)).nodes_gfe.count()
-    assert n_live == n_restored > 0
+    graph = str(tmp_path / "graph")
 
-    # restore over the live graph: refused, and the live graph still loads
-    assert main(["snapshot", "restore", "--root", root, "--graph", str(graph)]) != 0
-    assert "already holds data" in capsys.readouterr().err
-    assert GraphTables.load(spark, str(graph)).nodes_gfe.count() == n_live
+    def load(releases: tuple[str, ...]) -> str:
+        manifest = tmp_path / "m.json"
+        manifest.write_text(json.dumps({
+            "releases": {r: f"file://{remote}/hla.{r}.dat" for r in releases}
+        }))
+        assert main([
+            "load", "--manifest", f"file://{manifest}",
+            "--staging", str(tmp_path / "st"),
+            "--state", str(tmp_path / "state.json"),
+            "--registry", str(tmp_path / "reg"),
+            "--graph", graph,
+        ]) == 0
+        return capsys.readouterr().out
 
-    # restore-then-load: the next release commits onto the restored graph
-    shutil.copy(tmp_path / "state.json", tmp_path / "state2.json")
-    manifest2 = tmp_path / "m2.json"
-    manifest2.write_text(json.dumps({
-        "releases": {r: f"file://{remote}/hla.{r}.dat" for r in ("3550", "3560")}
-    }))
-    assert main([
-        "load", "--manifest", f"file://{manifest2}",
-        "--staging", str(tmp_path / "st"),
-        "--state", str(tmp_path / "state2.json"),
-        "--registry", str(tmp_path / "reg"),
-        "--graph", str(restored),
-    ]) == 0
-    assert "processed=['3560']" in capsys.readouterr().out
-    assert GraphTables.load(spark, str(restored)).nodes_gfe.count() >= n_restored
+    def n_nodes() -> int:
+        return GraphTables.load(spark, graph).nodes_gfe.count()
+
+    load(("3550",))
+    n_3550 = n_nodes()
+    assert main(["snapshot", "save", "--graph", graph]) == 0
+    assert "processed=['3560']" in load(("3550", "3560"))
+    n_3560 = n_nodes()
+    assert n_3560 > n_3550 > 0
+    assert main(["snapshot", "save", "--graph", graph]) == 0
+    assert main(["snapshot", "list", "--graph", graph]) == 0
+    listing = capsys.readouterr().out
+    assert "v0001" in listing and "v0002" in listing
+    assert main(["snapshot", "diff", "--graph", graph]) == 0
+    assert "nodes_gfe" in capsys.readouterr().out
+
+    assert main(["snapshot", "restore", "--graph", graph, "--version", "v0001"]) == 0
+    assert n_nodes() == n_3550
+
+    # restore-then-load: the watermark rolled back with the data, so the
+    # next load reprocesses 3560 on top of the restored graph
+    assert "processed=['3560']" in load(("3550", "3560"))
+    assert n_nodes() == n_3560
+    assert json.load(open(tmp_path / "state.json"))["releases"] == ["3550", "3560"]
 
 
 def test_cli_load_from_manifest(spark, tmp_path):

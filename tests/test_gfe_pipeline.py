@@ -301,21 +301,26 @@ def test_motif_compiler_patterns(spark, tmp_path):
 
 def test_snapshot_versioning_and_diff(spark, tmp_path):
     """S12 depth: versioned snapshots are append-only (v0001, v0002…),
-    restore-by-version works, and the diff reports the release delta."""
+    open by version, and the diff reports the release delta. A snapshot
+    is a pin on a graph manifest: saving one writes no data file."""
+    import os
+
     from gfe_db_spark.plans.accession import AccessionRegistry
     from gfe_db_spark.plans.build import build_release
     from gfe_db_spark.plans.load import GraphTables, load_release, upsert_graph
     from gfe_db_spark.plans.snapshots import (
         list_snapshots,
-        load_snapshot,
         save_snapshot,
         snapshot_diff,
     )
     from gfe_db_spark.sources.imgt import read_imgt_dat
     from tests import gfe_fixtures as fx
 
+    def files(root: str) -> set[str]:
+        return {os.path.join(d, f) for d, _dirs, fs in os.walk(root) for f in fs}
+
     reg = AccessionRegistry(spark, str(tmp_path / "reg"))
-    root = str(tmp_path / "snaps")
+    graph_path = str(tmp_path / "g")
 
     g1 = load_release(
         spark,
@@ -324,9 +329,14 @@ def test_snapshot_versioning_and_diff(spark, tmp_path):
         ),
         "3550",
     )
-    assert save_snapshot(g1, root) == "v0001"
-    graph_path = str(tmp_path / "g")
     upsert_graph(g1, graph_path)
+    before = files(graph_path)
+    assert save_snapshot(spark, graph_path) == "v0001"
+    # the pin (and its checksum) are the only new files: no data moves
+    new_files = files(graph_path) - before
+    assert {os.path.dirname(os.path.relpath(p, graph_path)) for p in new_files} == {
+        "_snapshots"
+    }
     upsert_graph(
         load_release(
             spark,
@@ -340,24 +350,18 @@ def test_snapshot_versioning_and_diff(spark, tmp_path):
         ),
         graph_path,
     )
-    g2 = GraphTables.load(spark, graph_path)
-    assert save_snapshot(g2, root) == "v0002"
-    assert list_snapshots(spark, root) == ["v0001", "v0002"]
-    # a snapshot is a manifest graph, the live graph's own format
-    for v in ("v0001", "v0002"):
-        assert (tmp_path / "snaps" / v / "_graph_manifests").is_dir()
-        assert (tmp_path / "snaps" / v / "nodes_gfe" / "_manifests").is_dir()
+    assert save_snapshot(spark, graph_path) == "v0002"
+    assert list(list_snapshots(spark, graph_path)) == ["v0001", "v0002"]
 
-    diff = {r.table: r for r in snapshot_diff(
-        load_snapshot(spark, root, "v0001"), load_snapshot(spark, root)
-    ).collect()}
+    diff = {r.table: r for r in snapshot_diff(spark, graph_path, "v0001").collect()}
     # 3560 adds one allele (A3) → new GFE node, and HAS_IPD_ALLELE edges
     # gain a release in their arrays (changed rows)
     assert diff["nodes_gfe"].n_added == 1
     assert diff["nodes_gfe"].n_removed == 0
     assert diff["edges_has_ipd_allele"].n_changed > 0
-    # restore-by-version round-trips
-    assert load_snapshot(spark, root, "v0001").nodes_gfe.count() == g1.nodes_gfe.count()
+    # open-by-version round-trips
+    v1 = GraphTables.load(spark, graph_path, as_of=list_snapshots(spark, graph_path)["v0001"])
+    assert v1.nodes_gfe.count() == g1.nodes_gfe.count()
 
 
 def test_deep_release_history(spark, tmp_path_factory):
@@ -367,7 +371,8 @@ def test_deep_release_history(spark, tmp_path_factory):
     one at a time, asserting at EVERY step — accession/GFE-name stability
     for the common allele prefix, A6 releases-array growth on the earliest
     allele's edge, the A8 release histogram covering exactly the committed
-    history, versioned snapshots whose consecutive diffs only ever add or
+    history, versioned snapshots (pins on the graph manifests, kept
+    through the auto-vacuum) whose consecutive diffs only ever add or
     release-extend rows (never remove), then replay-is-a-no-op and
     out-of-order rejection on top of the deep state."""
     import pyspark.sql.functions as SF
@@ -375,7 +380,6 @@ def test_deep_release_history(spark, tmp_path_factory):
     import gfe_db_spark.testing_fixtures as tfx
     from gfe_db_spark.plans.snapshots import (
         list_snapshots,
-        load_snapshot,
         save_snapshot,
         snapshot_diff,
     )
@@ -391,7 +395,6 @@ def test_deep_release_history(spark, tmp_path_factory):
     state = f"{tmp}/state.json"
     reg = f"{tmp}/registry"
     graph_path = f"{tmp}/graph"
-    snaps = f"{tmp}/snaps"
 
     first_allele = "HLA-A*01:00"  # i=0 → present in every release
     gfe_of_first = None
@@ -426,10 +429,12 @@ def test_deep_release_history(spark, tmp_path_factory):
             assert counts[label] >= c, label
         prev_counts = counts
 
-        save_snapshot(g, snaps)
+        save_snapshot(spark, graph_path)
         if j > 0:
-            old = load_snapshot(spark, snaps, f"v{j:04d}")
-            diff = {r.table: r for r in snapshot_diff(old, g).collect()}
+            diff = {
+                r.table: r
+                for r in snapshot_diff(spark, graph_path, f"v{j:04d}", f"v{j + 1:04d}").collect()
+            }
             for tname, row in diff.items():
                 assert row.n_removed == 0, (rel, tname)
                 if tname != "edges_has_ipd_allele":
@@ -438,7 +443,7 @@ def test_deep_release_history(spark, tmp_path_factory):
             assert diff["nodes_gfe"].n_added == 3
             assert diff["edges_has_ipd_allele"].n_changed > 0
 
-    assert list_snapshots(spark, snaps) == [f"v{j:04d}" for j in range(1, 11)]
+    assert list(list_snapshots(spark, graph_path)) == [f"v{j:04d}" for j in range(1, 11)]
 
     # replay the full history → watermark makes it a no-op
     res = run_incremental(spark, tmp, releases, state, reg, graph_path)
@@ -903,6 +908,48 @@ def test_vacuum_graph_respects_graph_manifest_pins(spark, tmp_path_factory):
     gm = [p for p in removed if "_graph_manifests" in p]
     assert len(gm) == 1 and gm[0].endswith("00000001.json")
     assert GraphTables.load(spark, graph_path).nodes_gfe.count() == n_before
+
+
+def test_snapshot_pin_survives_vacuum_and_restore_rolls_back(spark, tmp_path_factory):
+    """A snapshot pins a graph manifest: `vacuum_graph` keeps it (and the
+    table generations it pins) under the smallest window, and it still
+    opens. Restoring it rolls the graph AND the release watermark back in
+    place, so the next load reprocesses the later release and commits it
+    on top of the restored generations."""
+    from gfe_db_spark.plans import txtable as TX
+    from gfe_db_spark.plans.load import read_graph_manifest, vacuum_graph
+    from gfe_db_spark.plans.snapshots import list_snapshots, restore_snapshot, save_snapshot
+    from gfe_db_spark.streaming.incremental import committed_releases, run_incremental
+
+    tmp = str(tmp_path_factory.mktemp("pinrestore"))
+    releases = _two_synthetic_releases(tmp)
+    store = (f"{tmp}/state.json", f"{tmp}/reg", f"{tmp}/graph")
+    graph_path = store[2]
+
+    def rows(g: GraphTables) -> dict[str, list]:
+        return {name: sorted(df.collect(), key=repr) for name, df in g.items()}
+
+    first = rows(run_incremental(spark, tmp, releases[:1], *store).graph)
+    assert save_snapshot(spark, graph_path) == "v0001"
+    second = rows(run_incremental(spark, tmp, releases, *store).graph)
+    assert first != second
+
+    vacuum_graph(spark, graph_path, keep_graph_manifests=1, grace_seconds=0)
+    pinned = list_snapshots(spark, graph_path)["v0001"]
+    assert rows(GraphTables.load(spark, graph_path, as_of=pinned)) == first
+
+    restored = restore_snapshot(spark, graph_path, "v0001")
+    gdoc = read_graph_manifest(spark, graph_path)
+    assert gdoc["generation"] == restored
+    assert committed_releases(spark, graph_path) == releases[:1]
+    assert rows(GraphTables.load(spark, graph_path)) == first
+
+    res = run_incremental(spark, tmp, releases, *store)
+    assert res.processed == releases[1:]
+    assert rows(res.graph) == second
+    for name, gen in read_graph_manifest(spark, graph_path)["tables"].items():
+        assert gen == gdoc["tables"][name] + 1, name
+        assert TX.read_manifest(spark, f"{graph_path}/{name}")["generation"] == gen
 
 
 def test_registry_tx_reader_isolated_during_append_and_compaction(

@@ -9,7 +9,7 @@ import os
 import pytest
 
 from gfe_db_spark.streaming.incremental import (
-    ReleaseState,
+    committed_releases,
     detect_new_releases,
     monotonicity_ok,
     run_incremental,
@@ -24,26 +24,166 @@ from tests import gfe_fixtures as fx
 from tests.conftest import SF_SMOKE
 
 
-def test_release_state_roundtrip(tmp_path):
+def test_release_state_roundtrip(spark, tmp_path):
+    """ST2: the watermark is the graph manifest's release record; the
+    state path holds only its export, in the reference's state-file shape."""
+    from gfe_db_spark.plans.load import GraphTables, read_graph_manifest
+
+    fx.write_release_dat(str(tmp_path), "3550")
+    fx.write_release_dat(str(tmp_path), "3560")
     sp = str(tmp_path / "state.json")
-    st = ReleaseState.load(sp)
-    assert st.releases == []
-    st.commit("3550")
-    st.commit("3560")
-    st2 = ReleaseState.load(sp)
-    assert st2.releases == ["3550", "3560"]
+    graph = str(tmp_path / "graph")
+    assert committed_releases(spark, graph) == []
+    for release in ("3550", "3560"):
+        run_incremental(spark, str(tmp_path), [release], sp, str(tmp_path / "reg"), graph)
+    gdoc = read_graph_manifest(spark, graph)
+    assert gdoc["release"] == "3560"
+    assert gdoc["releases"] == ["3550", "3560"] == committed_releases(spark, graph)
+    assert set(gdoc["tables"]) == {name for name, _df in GraphTables.load(spark, graph).items()}
     doc = json.load(open(sp))
     assert set(doc) == {"timestamp", "repository_url", "releases"}
+    assert doc["releases"] == ["3550", "3560"]
 
 
-def test_detect_and_guard(tmp_path):
-    st = ReleaseState.load(str(tmp_path / "s.json"))
-    st.releases = ["3540", "3550"]
+def test_detect_and_guard():
+    committed = ["3540", "3550"]
     # F5 regex filters branch junk; anti-join drops processed
-    assert detect_new_releases(["main", "3550", "3560", "v2", "3570"], st) == ["3560", "3570"]
+    assert detect_new_releases(["main", "3550", "3560", "v2", "3570"], committed) == [
+        "3560",
+        "3570",
+    ]
     assert monotonicity_ok(["3540", "3550", "3560"])
     assert not monotonicity_ok(["3540", "3560"])  # gap
     assert not monotonicity_ok(["3540", "3545"])  # off-grid
+
+
+def _graph_rows(graph) -> dict[str, list]:
+    return {name: sorted(df.collect(), key=repr) for name, df in graph.items()}
+
+
+def test_run_incremental_on_uri_store(spark, tmp_path):
+    """Every store path may be a Hadoop URI: with file:// state, registry
+    and graph paths two releases commit, the watermark advances, a replay
+    is a no-op, and the graph equals the same run's on plain paths."""
+    from gfe_db_spark.plans.load import GraphTables
+
+    data_dir = str(tmp_path)
+    fx.write_release_dat(data_dir, "3550")
+    fx.write_release_dat(data_dir, "3560")
+
+    def run(root: str):
+        return run_incremental(
+            spark,
+            data_dir,
+            ["3550", "3560"],
+            state_path=f"{root}/state.json",
+            registry_path=f"{root}/registry",
+            graph_path=f"{root}/graph",
+        )
+
+    uri = f"file://{tmp_path}/uri"
+    assert run(uri).processed == ["3550", "3560"]
+    assert run(uri).processed == []
+    assert committed_releases(spark, f"{uri}/graph") == ["3550", "3560"]
+    assert json.load(open(tmp_path / "uri" / "state.json"))["releases"] == ["3550", "3560"]
+    plain = run(str(tmp_path / "plain"))
+    assert plain.processed == ["3550", "3560"]
+    assert _graph_rows(GraphTables.load(spark, f"{uri}/graph")) == _graph_rows(plain.graph)
+
+
+@pytest.fixture(scope="module")
+def committed_3550(spark, tmp_path_factory):
+    """A store holding release 3550, and a copy that committed 3560
+    without interruption."""
+    import shutil
+
+    data = str(tmp_path_factory.mktemp("crash_data"))
+    fx.write_release_dat(data, "3550")
+    fx.write_release_dat(data, "3560")
+    base = str(tmp_path_factory.mktemp("crash_base"))
+    run_incremental(spark, data, ["3550"], f"{base}/state.json", f"{base}/reg", f"{base}/graph")
+    clean = str(tmp_path_factory.mktemp("crash_clean") / "store")
+    shutil.copytree(base, clean)
+    res = run_incremental(
+        spark, data, ["3560"], f"{clean}/state.json", f"{clean}/reg", f"{clean}/graph"
+    )
+    assert res.processed == ["3560"]
+    return data, base, clean
+
+
+def _inject_fault(monkeypatch, point: str, graph_path: str) -> None:
+    import threading
+
+    from gfe_db_spark.plans import txtable
+    from gfe_db_spark.streaming import incremental
+
+    def crash(*_args, **_kwargs):
+        raise RuntimeError(f"injected crash {point}")
+
+    if point == "after_registry_commit":
+        build = incremental.build_release
+
+        def build_then_crash(*args, **kwargs):
+            build(*args, **kwargs).unpersist()
+            crash()
+
+        monkeypatch.setattr(incremental, "build_release", build_then_crash)
+    elif point == "after_5_table_commits":
+        publish, lock, done = txtable._publish, threading.Lock(), []
+
+        def publish_five(spark, root, manifest, gen_dir):
+            if not root.startswith(graph_path):
+                return publish(spark, root, manifest, gen_dir)
+            with lock:
+                if len(done) == 5:
+                    crash()
+                publish(spark, root, manifest, gen_dir)
+                done.append(root)
+
+        monkeypatch.setattr(txtable, "_publish", publish_five)
+    else:  # after the graph-manifest publish, before the state export
+        monkeypatch.setattr(incremental, "export_state", crash)
+
+
+@pytest.mark.parametrize(
+    "point",
+    ["after_registry_commit", "after_5_table_commits", "before_state_export"],
+)
+def test_crash_then_replay_matches_uninterrupted_run(
+    spark, tmp_path, monkeypatch, committed_3550, point
+):
+    """A load that dies at any point replays to the uninterrupted result:
+    the same accession rows, equal graph tables, and a watermark (graph
+    manifest and export) that lists the release once."""
+    import shutil
+
+    from gfe_db_spark.plans.accession import AccessionRegistry
+    from gfe_db_spark.plans.load import GraphTables
+
+    data, base, clean = committed_3550
+    store = str(tmp_path / "store")
+    shutil.copytree(base, store)
+    args = (f"{store}/state.json", f"{store}/reg", f"{store}/graph")
+
+    with monkeypatch.context() as m:
+        _inject_fault(m, point, f"{store}/graph")
+        with pytest.raises(RuntimeError, match="injected crash"):
+            run_incremental(spark, data, ["3560"], *args)
+    # only the graph-manifest publish advances the watermark
+    published = point == "before_state_export"
+    assert committed_releases(spark, f"{store}/graph") == ["3550", "3560"][: 1 + published]
+    res = run_incremental(spark, data, ["3560"], *args)
+    assert res.processed == ([] if published else ["3560"])
+
+    def registry(root: str) -> list:
+        return sorted(AccessionRegistry(spark, f"{root}/reg").load().collect(), key=repr)
+
+    assert registry(store) == registry(clean)
+    assert _graph_rows(GraphTables.load(spark, f"{store}/graph")) == _graph_rows(
+        GraphTables.load(spark, f"{clean}/graph")
+    )
+    assert committed_releases(spark, f"{store}/graph") == ["3550", "3560"]
+    assert json.load(open(f"{store}/state.json"))["releases"] == ["3550", "3560"]
 
 
 def test_run_incremental_end_to_end(spark, tmp_path):
@@ -243,7 +383,7 @@ def test_tx_upsert_rewrites_only_touched_buckets(spark, tmp_path):
     assert {p.split(os.sep)[-2] for p in before} == {f"__bucket={b}" for b in range(8)}
 
     one = spark.createDataFrame([(42, -1)], "k long, v long")
-    touched = tx_upsert(one, target, ["k"], n_buckets=8)
+    touched, _gen = tx_upsert(one, target, ["k"], n_buckets=8)
     assert len(touched) == 1
 
     after = inventory()

@@ -90,8 +90,8 @@ def test_tx_commit_is_o_batch(spark, tmp_path):
     root = str(tmp_path / "t")
     TX.tx_upsert(_mk(spark, 64, 1), root, ["k"], n_buckets=8)
     one = spark.createDataFrame([(3, 7)], "k long, val long")
-    touched = TX.tx_upsert(one, root, ["k"], n_buckets=8)
-    assert len(touched) == 1
+    touched, gen = TX.tx_upsert(one, root, ["k"], n_buckets=8)
+    assert len(touched) == 1 and gen == 2
     m = TX.read_manifest(spark, root)
     gens = set(m["buckets"].values())
     assert {TX._parse_gen(g) for g in gens} == {1, 2}
