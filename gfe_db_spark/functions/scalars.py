@@ -32,16 +32,6 @@ def seq_hash_udf(s: pd.Series) -> pd.Series:
     return s.map(lambda x: None if x is None else seq_hash_py(x))
 
 
-def locus_of(description: Column) -> Column:
-    """C2 (ref app.py:373,603): `description.split(",")[0].split("*")[0]`."""
-    return F.element_at(F.split(F.element_at(F.split(description, ","), 1), "\\*"), 1)
-
-
-def hla_name_of(description: Column) -> Column:
-    """C3 (ref app.py:604): `description.split(",")[0]`."""
-    return F.element_at(F.split(description, ","), 1)
-
-
 def release_undotted(release: Column) -> Column:
     """C4 (ref load.cyp:94): strip dots — '3.56.0' → '3560'."""
     return F.regexp_replace(release, "\\.", "")

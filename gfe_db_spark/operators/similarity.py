@@ -275,8 +275,7 @@ def ivf_append_batch(
     Delivery contract: the append itself is all-or-nothing (parquet job
     commit), but REPLAYING a committed batch duplicates rows — an
     at-least-once producer should route through `plans/txtable.tx_upsert`
-    keyed on (centroid_id, vec_id) instead, the same way the streaming
-    sink does (streaming/structured.foreach_batch_upsert).
+    keyed on (centroid_id, vec_id) instead.
     """
     # persist so the assignment job (broadcast centroids + min_by agg over
     # the batch) runs once, shared by the touched-id collect and the write

@@ -1,6 +1,6 @@
 """Reader-isolated commits over plain parquet: a manifest-pointer table —
 the engine's one commit protocol for the graph, the accession registry and
-the streaming sink.
+the `txtable_*` entries.
 
 The reference's store is transactional (Neo4j: ``load.cyp:9`` batches
 inside ``apoc.periodic.iterate`` transactions), so a reader never sees a

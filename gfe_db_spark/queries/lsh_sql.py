@@ -93,12 +93,3 @@ def adaptive_lsh_ctes(
 ), a AS (
   SELECT vec_id, v, xor(bucket, m) AS bucket FROM b CROSS JOIN masks
 )"""
-
-
-def probe_unnest_sql(bucket_expr: str, n_planes: int, probe_bits: int) -> str:
-    """`unnest([...])` expansion of a bucket into its multi-probe XOR
-    neighborhood — mirrors operators/dedup.probe_masks."""
-    from gfe_db_spark.operators.dedup import probe_masks
-
-    probes = ", ".join(f"xor({bucket_expr}, {m})" for m in probe_masks(n_planes, probe_bits))
-    return f"unnest([{probes}])"

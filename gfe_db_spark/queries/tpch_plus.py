@@ -751,7 +751,7 @@ def sketch_distinct_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash, and each engine asserts ITS OWN sketch lands within 5% of exact
     — stable booleans on deterministic data (HLL's default rsd is ~2%).
 
-    Plan shape (r13, same fix as rolling_distinct_users_7d_approx): the
+    Plan shape (r13): the
     (event_type, user_id) dedup is its OWN narrow exchange; the mixed
     `agg(count_distinct, approx_count_distinct)` form would plan the
     partial HLL buffer (~1.6k longs at rsd 0.01) keyed per DISTINCT

@@ -213,12 +213,3 @@ ACCESSION_REGISTRY = T.StructType(
         T.StructField("first_release", T.StringType()),
     ]
 )
-
-
-def assert_schema(df, expected: T.StructType, name: str) -> None:
-    """The engine's analog of the reference's header-set equality check
-    (`validate_build_output/app.py:106`): column names must match exactly."""
-    got = set(df.columns)
-    want = {f.name for f in expected.fields}
-    if got != want:
-        raise ValueError(f"{name}: columns {sorted(got)} != expected {sorted(want)}")

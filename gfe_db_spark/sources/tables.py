@@ -160,14 +160,3 @@ def corpus_stats(
         return (int(row["n"]), int(row["d"]))
 
     return memo_sizing(sf_dir, name, f"corpus_stats:{text_col}", _compute)
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: table(spark, sf_dir, name) for name in TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every table as a temp view so `spark.sql` queries match the
-    DuckDB oracle's pre-registered view names."""
-    for name in TABLES:
-        table(spark, sf_dir, name).createOrReplaceTempView(name)

@@ -1,3 +1,3 @@
-"""Streaming & incremental processing: release-grain incremental batch
-(the reference's model, ST1-ST6) plus true Structured Streaming operators
-(windowed/session aggregation, idempotent foreachBatch upsert)."""
+"""The GFE release loop (`incremental.py`, ST1-ST6): detect new IMGT/HLA
+releases, then parse, build and load each one in order, with the graph
+manifest as the watermark."""

@@ -562,40 +562,6 @@ def test_duplicated_spans_match_bruteforce(spark, texts):
     assert got == want
 
 
-@given(
-    pairs=st.lists(
-        st.tuples(
-            st.integers(min_value=1, max_value=6),  # user
-            st.integers(min_value=0, max_value=15),  # epoch day
-        ),
-        min_size=1,
-        max_size=40,
-    )
-)
-@settings(**SETTINGS)
-def test_rolling_distinct_matches_bruteforce(spark, pairs):
-    """Trailing-7-day distinct users vs a brute-force recount, for ANY
-    activity pattern (gaps, repeats, single-day bursts)."""
-    from gfe_db_spark.queries.streaming import rolling_distinct_users_7d
-    import os
-    import tempfile
-
-    rows = [(u, d * 86400 + 3600) for u, d in pairs]
-    with tempfile.TemporaryDirectory() as tmp:
-        spark.createDataFrame(rows, "user_id long, secs long").selectExpr(
-            "user_id", "timestamp_seconds(secs) AS ts"
-        ).write.parquet(os.path.join(tmp, "events.parquet"))
-        got = {
-            r.day: r.n_users_7d
-            for r in rolling_distinct_users_7d(spark, tmp).collect()
-        }
-    want = {}
-    days = {d for _, d in pairs}
-    for d in days:
-        want[d] = len({u for u, dd in pairs if d - 6 <= dd <= d})
-    assert got == want
-
-
 def test_bucketed_candidates_are_unique_without_dedupe(spark):
     """XOR multi-probe candidate generation emits every (id_a, id_b) pair
     at most once — the single matching mask is bucket_a XOR bucket_b — so

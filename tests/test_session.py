@@ -18,15 +18,12 @@ _PREFIXES = (
     "gfe_fx_aligned_",
     "gfe_txtable_demo_",  # queries/warehouse.txtable_upsert
     "gfe_txtable_tt_",  # queries/warehouse.txtable_time_travel_diff
-    "gfe_sink_",  # queries/streaming.stream_upsert_sink
-    "gfe_ds_",  # queries/streaming.imgt_datasource_scan
-    "gfe_stream_ds_",  # queries/streaming.imgt_stream_scan
     "gfe_ivf_incr_",  # queries/similarity.ann_index_append
 )
 
 _CHILD = f"""
 import json, os, tempfile
-from gfe_db_spark.queries import graph, similarity, streaming, warehouse
+from gfe_db_spark.queries import graph, similarity, warehouse
 from gfe_db_spark.session import get_spark
 
 spark = get_spark("exit_cleanup_probe")
@@ -34,9 +31,6 @@ graph._fixture_build(spark)
 graph._fixture_build(spark, with_alignments=True)
 warehouse.txtable_upsert(spark, {SF_SMOKE!r}).count()
 warehouse.txtable_time_travel_diff(spark, {SF_SMOKE!r}).count()
-streaming.stream_upsert_sink(spark, {SF_SMOKE!r}).count()
-streaming.imgt_datasource_scan(spark, {SF_SMOKE!r}).count()
-streaming.imgt_stream_scan(spark, {SF_SMOKE!r}).count()
 similarity.ann_index_append(spark, {SF_SMOKE!r}).count()
 print(json.dumps(sorted(os.listdir(tempfile.gettempdir()))))
 """
@@ -48,9 +42,9 @@ def _ours(names: list[str]) -> list[str]:
 
 def test_scratch_files_removed_at_exit(tmp_path):
     """The shipped package zip, the fixture build dirs, the txtable
-    entries' scratch tables and the streaming, datasource and IVF entries'
-    scratch dirs exist while the process runs (lazy frames read them) and
-    are gone once its interpreter exits."""
+    entries' scratch tables and the IVF entry's scratch dir exist while
+    the process runs (lazy frames read them) and are gone once its
+    interpreter exits."""
     env = dict(
         os.environ,
         TMPDIR=str(tmp_path),
